@@ -34,10 +34,6 @@ MD5I = "('0x' || substr(md5({x}), 1, 14))::BIGINT"
 P61 = (1 << 61) - 1
 
 
-def _minhash_params(num_hashes: int = 32):
-    return [((2 * i + 1) * 1_000_003 % P61, (i * i + i + 1) * 998_244_353 % P61) for i in range(num_hashes)]
-
-
 def _jaccard_cte(threshold: float, max_df: int = 64) -> str:
     """Shared shingle/Jaccard SQL (word 3-grams over normalized text,
     stop-shingles with doc-frequency > max_df removed — mirrors
@@ -71,7 +67,7 @@ ORDER BY 1, 2
 
 def _minhash_lsh_sql(num_hashes: int = 32, bands: int = 8, threshold: float = 0.05, max_df: int = 64) -> str:
     r = num_hashes // bands
-    params = _minhash_params(num_hashes)
+    params = D.minhash_params(num_hashes)
     mins = ",\n    ".join(
         f"min(({a} * xi + {b}) % {P61}) AS h{i}" for i, (a, b) in enumerate(params)
     )

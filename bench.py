@@ -17,12 +17,22 @@ local[32] throughput on the extraction stage and report scaling efficiency
 from __future__ import annotations
 
 import json
+import logging
 import os
 import sys
 import time
 
+log = logging.getLogger("bench")
 
-def _run_suite(spark, sf_dir: str) -> dict[str, float]:
+
+def _record_error(out: dict, block: str, ex: Exception) -> None:
+    """Keep a failed optional block visible in the JSON instead of silently
+    dropping its rows."""
+    out.setdefault("errors", {})[block] = f"{type(ex).__name__}: {ex}"
+    log.warning("bench block %s failed", block, exc_info=ex)
+
+
+def _run_suite(spark, sf_dir: str) -> dict:
     import __spark_entry__ as e
 
     headline = [
@@ -80,7 +90,7 @@ def _run_suite(spark, sf_dir: str) -> dict[str, float]:
         "q67_length_percentiles",
     ]
     qs = e.queries()
-    out: dict[str, float] = {}
+    out: dict = {}
     for name in headline:
         t0 = time.perf_counter()
         df = qs[name](spark, sf_dir)
@@ -134,8 +144,8 @@ def _run_suite(spark, sf_dir: str) -> dict[str, float]:
                       "q63_source_overlap")
         )
         out["dedup_shared_index_vs_solo"] = round(total_s / solo, 3) if solo else None
-    except Exception:
-        pass
+    except Exception as ex:
+        _record_error(out, "dedup_shared_index", ex)
 
     # extraction throughput over a synthetic pages table (payload stage)
     try:
@@ -180,8 +190,8 @@ def _run_suite(spark, sf_dir: str) -> dict[str, float]:
         out["extract_steady_pages_per_sec"] = round(n_big / dt_big, 1)
         out["extract_steady_units_per_sec"] = round(n_units_big / dt_big, 1)
         big.unpersist()
-    except Exception:
-        pass  # extraction stage not built yet / optional dep missing
+    except Exception as ex:
+        _record_error(out, "extract", ex)
     return out
 
 

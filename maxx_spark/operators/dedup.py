@@ -104,53 +104,45 @@ def word_shingle_keys(documents: DataFrame, n: int = 3) -> DataFrame:
     return d.select("doc_id", F.explode(F.array_distinct(sh)).alias("shingle"))
 
 
-def _capped_shingles(
-    documents: DataFrame,
-    n: int,
-    max_df: int,
-    index: DataFrame | None = None,
-    df_mode: str = "join",
-) -> DataFrame:
+def _capped_shingles(idx: DataFrame, max_df: int) -> DataFrame:
     """Shingle index with stop-shingle removal: shingles occurring in more
     than ``max_df`` documents are dropped *before* the self-join. A shingle
     shared by d docs contributes d^2 join rows — without the cap one viral
     shingle at web scale turns the join quadratic; with it the per-shingle
     fanout is bounded by max_df^2. Jaccard is then computed on the filtered
-    shingle universe (applied identically in the SQL oracle)."""
-    from pyspark.sql import Window
+    shingle universe (applied identically in the SQL oracle).
 
-    # df via a count-window over shingle instead of groupBy+join-back:
-    # ONE exchange on shingle (vs agg shuffle + join shuffle), and the
-    # filtered index emerges ALREADY partitioned on shingle — the exact
-    # partitioning the downstream self-join keys on, so Catalyst reuses
-    # the exchange instead of re-shuffling both sides.
-    # Caveat (measured trade, kept deliberately): a pathologically viral
-    # shingle lands in ONE window partition before the cap discards it,
-    # and AQE cannot split window partitions (it can split skewed joins).
-    # df_mode='join' IS that escape hatch (r5 advisory #3, closed r6): the
-    # df comes from a map-side-combined groupBy (the viral shingle is a
-    # per-partition partial, never one task's row pile), surviving-shingle
-    # keys semi-join back, the join output is also shingle-partitioned so
-    # the downstream self-join exchange reuse survives, and every skewed
-    # stage is AQE-splittable. Byte-equal outputs (test_dedup_df_modes).
-    # DEFAULT = 'join' since r6: the r3 A/B that favored the window
-    # (7.5→5.0 s) predates the 8-byte md5i keys; re-measured on the keyed
-    # index (two interleaved sf0.1 sessions, 7 reps each) the two are a
-    # wash inside box noise (medians: window 6.3 s vs join 5.4 s, ranges
-    # fully overlapping) — so the scale-safe AQE-splittable form wins by
-    # default and 'window' stays for single-box squeezing.
-    idx = index if index is not None else word_shingle_keys(documents, n)
-    if df_mode == "join":
-        dfc = idx.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-        return idx.join(
-            dfc.where(F.col("__df") <= max_df).select("shingle"), "shingle"
-        )
-    w = Window.partitionBy("shingle")
+    The df comes from a map-side-combined groupBy (a viral shingle is a
+    per-partition partial, never one task's row pile) and the surviving
+    shingle keys semi-join back: the join output is shingle-partitioned, so
+    the downstream self-join reuses its exchange, and every skewed stage is
+    AQE-splittable (a count-window over shingle was a wash on the keyed
+    index, r6 A/B, and AQE cannot split window partitions)."""
+    dfc = idx.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
+    return idx.join(dfc.where(F.col("__df") <= max_df).select("shingle"), "shingle")
+
+
+def _jaccard_verify(sh: DataFrame, inter: DataFrame, threshold: float) -> DataFrame:
+    """Exact-Jaccard tail shared by both pair operators: attach per-doc
+    shingle counts of ``sh`` to ``inter`` (doc_a, doc_b, inter_size), keep
+    pairs at or above ``threshold`` and emit (doc_a, doc_b, inter_size,
+    union_size) ordered by (doc_a, doc_b).
+
+    Sizes attach via SHUFFLE joins keyed by doc id, never a broadcast hint —
+    `sizes` has one row per document, and a broadcast must fit absolutely:
+    at 10^9+ docs a broadcast(sizes) is a guaranteed driver OOM, while the
+    shuffle join moves only (doc_a, doc_b, ints) pairs one extra exchange.
+    (AQE may still auto-broadcast at small SF — that decision is size-based
+    at runtime, not a hint forcing it at any scale.) The Jaccard ratio is
+    re-derivable exactly from the two integers, so no float leaves."""
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     return (
-        idx
-        .withColumn("__df", F.count(F.lit(1)).over(w))
-        .where(F.col("__df") <= max_df)
-        .drop("__df")
+        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
+        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
+        .withColumn("union_size", F.col("n_a") + F.col("n_b") - F.col("inter_size"))
+        .where(F.col("inter_size") * F.lit(1.0) / F.col("union_size") >= threshold)
+        .select("doc_a", "doc_b", "inter_size", "union_size")
+        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -160,7 +152,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.05,
     max_df: int = 64,
     index: DataFrame | None = None,
-    df_mode: str = "join",
 ) -> DataFrame:
     """Exact Jaccard near-dup pairs via inverted index self-join (on the
     stop-shingle-filtered universe, see _capped_shingles).
@@ -171,18 +162,11 @@ def ngram_jaccard_pairs(
     passes it to each; the caller owns persistence and must build it from
     the SAME documents at the SAME n. Default (None) builds it inline.
 
-    |A∩B| from the shingle join; |A|,|B| from per-doc counts, attached via
-    SHUFFLE joins keyed by doc id — `sizes` has one row per document, and
-    a broadcast must fit absolutely (not merely "relative to the exploded
-    index"): at 10^9+ docs a broadcast(sizes) is a guaranteed driver OOM,
-    while the shuffle join moves only (doc_a, doc_b, ints) pairs one extra
-    exchange. (AQE may still auto-broadcast at small SF — fine: that
-    decision is size-based at runtime, not a hint forcing it at any
-    scale.) Emits (doc_a, doc_b, inter_size, union_size) with
-    doc_a < doc_b; the Jaccard ratio is re-derivable exactly from the two
-    integers, so no float leaves the operator.
+    |A∩B| from the shingle join; |A|,|B| from per-doc counts (see
+    _jaccard_verify). Emits (doc_a, doc_b, inter_size, union_size) with
+    doc_a < doc_b.
 
-    r7: the RAW index is pinned before the df cap — df_mode='join' builds
+    r7: the RAW index is pinned before the df cap — the df cap builds
     the capped index as idx ⨝ (df rollup of idx), i.e. TWO passes over the
     raw index; without the pin both passes re-scan and re-hash the corpus
     (the single heaviest map work in the operator). Pinning also makes the
@@ -191,8 +175,7 @@ def ngram_jaccard_pairs(
     once even without an explicit ``index=``.
     """
     sh0 = index if index is not None else word_shingle_keys(documents, n).cache()
-    sh = _capped_shingles(documents, n, max_df, index=sh0, df_mode=df_mode).cache()
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    sh = _capped_shingles(sh0, max_df).cache()
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     inter = (
@@ -201,47 +184,21 @@ def ngram_jaccard_pairs(
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("inter_size"))
     )
-    out = (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
-        .withColumn("union_size", F.col("n_a") + F.col("n_b") - F.col("inter_size"))
-        .where(F.col("inter_size") * F.lit(1.0) / F.col("union_size") >= threshold)
-        .select("doc_a", "doc_b", "inter_size", "union_size")
-        .orderBy("doc_a", "doc_b")
-    )
-    return out
+    return _jaccard_verify(sh, inter, threshold)
+
+
+def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
+    """The deterministic MinHash (a_i, b_i) for h_i(x) = (a_i*x + b_i) mod P
+    (odd multipliers, fixed literals) — one list shared by minhash_lsh_pairs
+    and the DuckDB oracle. Callers reduce x mod 2^31 first; with these
+    small a_i, a_i*x + b_i then stays in long range."""
+    return [((2 * i + 1) * 1_000_003 % _P, (i * i + i + 1) * 998_244_353 % _P) for i in range(num_hashes)]
 
 
 def md5i(col, nhex: int = 14):
     """Deterministic 56-bit integer hash usable identically in Spark and
     ANSI SQL: first ``nhex`` hex digits of md5, parsed base-16."""
     return F.conv(F.substring(F.md5(col), 1, nhex), 16, 10).cast("long")
-
-
-def minhash_signatures(
-    documents: DataFrame, num_hashes: int = 32, n: int = 3, shingles: DataFrame | None = None
-) -> DataFrame:
-    """MinHash signatures: h_i(x) = (a_i*x + b_i) mod P over md5i shingle
-    ints; signature = array of per-i minima. Two-stage agg, fully built-in:
-    explode shingles → per-doc min of each hash. The per-hash mins compute
-    map-side; shuffle carries |docs| x num_hashes longs only.
-
-    NOTE: a_i*x can exceed 2^63 (x is 56-bit) — reduce x mod 2^31 first so
-    every product stays in long range; collision risk at 31 bits is
-    irrelevant for min-hashing.
-    """
-    # deterministic (a_i, b_i) parameters — fixed literals, odd multipliers
-    params = [((2 * i + 1) * 1_000_003 % _P, (i * i + i + 1) * 998_244_353 % _P) for i in range(num_hashes)]
-    sh = shingles if shingles is not None else word_shingle_keys(documents, n)
-    # a pre-hashed (long) index feeds x directly; a string index hashes here
-    key = F.col("shingle")
-    x = (key if dict(sh.dtypes)["shingle"] == "bigint" else md5i(key)) % F.lit(1 << 31)
-    mins = [
-        F.min((F.lit(a % _P) * x + F.lit(b % _P)) % F.lit(_P)).alias(f"h{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    sig = sh.groupBy("doc_id").agg(*mins)
-    return sig.select("doc_id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("signature"))
 
 
 def minhash_lsh_pairs(
@@ -273,7 +230,7 @@ def minhash_lsh_pairs(
     # and re-analyzed the growing 32-aggregate tree at every transformation,
     # ~3.5 s of DRIVER time per invocation at any scale (measured with
     # cProfile; identical analyzed plans either way).
-    params = [((2 * i + 1) * 1_000_003 % _P, (i * i + i + 1) * 998_244_353 % _P) for i in range(num_hashes)]
+    params = minhash_params(num_hashes)
     if dict(sh0.dtypes)["shingle"] == "bigint":
         x_sql = f"(shingle % {1 << 31})"
     else:
@@ -335,12 +292,7 @@ def minhash_lsh_pairs(
     # instead makes the expensive capped index a reusable artifact, which
     # is the composed-pipeline (and bench-suite) win, and both orders move
     # the full raw index through exactly one shuffle either way.
-    sh = (
-        _capped_shingles(documents, n, max_df, index=sh0)
-        .join(cand_ids, "doc_id")
-        .cache()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    sh = _capped_shingles(sh0, max_df).join(cand_ids, "doc_id").cache()
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     inter = (
@@ -349,16 +301,7 @@ def minhash_lsh_pairs(
         .agg(F.count(F.lit(1)).alias("inter_size"))
     )
     return (
-        # per-doc sizes attach via shuffle joins, NOT broadcast — one row
-        # per document can never be assumed to fit in driver memory (see
-        # ngram_jaccard_pairs docstring; AQE may still choose broadcast at
-        # runtime when actually small)
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
-        .withColumn("union_size", F.col("n_a") + F.col("n_b") - F.col("inter_size"))
-        .where(F.col("inter_size") * F.lit(1.0) / F.col("union_size") >= threshold)
-        .select("doc_a", "doc_b", "inter_size", "union_size")
-        .orderBy("doc_a", "doc_b")
+        _jaccard_verify(sh, inter, threshold)
         # r7: pin the verified pair list — the near-dup pair set is the
         # artifact every downstream consumer (clustering, span stats,
         # reporting) reads repeatedly, and it is orders of magnitude

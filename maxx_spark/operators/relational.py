@@ -1,4 +1,4 @@
-"""Relational operators: aggregations, joins, dedup-by-precedence, top-k.
+"""Relational operators: aggregations, joins, top-k.
 
 Scale notes (100 TB design):
 - Money arithmetic runs in DECIMAL so partial aggregation is exact and
@@ -13,8 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from maxx_spark.operators.spread import spread_scan
 
 DEC = "decimal(18,4)"
 
@@ -61,12 +59,8 @@ def revenue_by_nation(customer: DataFrame, orders: DataFrame, lineitem: DataFram
     # customer scales linearly with SF (~150k x SF rows) — no broadcast hint;
     # AQE still broadcasts it at runtime when it is genuinely small. Hints
     # stay only on nation/region, the fixed 25/5-row dims.
-    # spread_scan: when every dim broadcasts, the probe side runs decode +
-    # 4 hash probes + partial agg with NO exchange anywhere — an
-    # unsplittable single-row-group fact file serializes that whole chain
-    # on one task (guide §2.5); no-op on an already-parallel scan.
     return (
-        spread_scan(lineitem).join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        lineitem.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(customer, F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
@@ -146,27 +140,9 @@ def order_priority_counts(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     )
 
 
-def dedup_by_precedence(df: DataFrame, identifier: str, order_cols: list[str], keep_cols: list[str]) -> DataFrame:
-    """Shadowing dedup (SURVEY.md E7): first row wins per identifier under a
-    total order. MATLAB path-shadowing semantics (reference
-    collection.py:467,517 — first path on the search path wins) generalized.
-
-    row_number over (partition by identifier order by precedence) — the
-    partial ordering shuffles once on the identifier; no skew risk at scale
-    because identifier cardinality is high; for mega-key skew use
-    ``windows.salted_agg`` shapes instead.
-    """
-    w = Window.partitionBy(identifier).orderBy(*[F.col(c) for c in order_cols])
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .select(identifier, *keep_cols)
-    )
-
-
 def latest_event_per_user(events: DataFrame) -> DataFrame:
-    """Concrete E7 instance on the events table: latest event per user
-    (ts desc, event_id desc as deterministic tiebreak)."""
+    """Shadowing dedup (SURVEY.md E7) on the events table: latest event per
+    user (ts desc, event_id desc as deterministic tiebreak)."""
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
     return (
         events.withColumn("rn", F.row_number().over(w))

@@ -8,77 +8,43 @@ every knob is chosen to also be the right *shape* at cluster scale:
   html blobs through Arrow; unbounded batches would OOM Python workers).
 - shuffle.partitions defaults to cores*2 locally; on a real cluster this is
   overridden (or left to AQE coalescing from a high initial number).
+
+``get_spark`` also runs a one-time session warmup that grows the Python
+worker pool and imports pandas in every worker (``SPARK_GRAFT_WARMUP=0``
+disables it).
 """
 
 from __future__ import annotations
 
+import logging
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import SparkSession
 
+log = logging.getLogger(__name__)
+
 
 def _warm_session(spark: SparkSession, cores: int) -> None:
-    """One-time session warmup (fixed ~5-7 s, data-independent, disable
-    with SPARK_GRAFT_WARMUP=0). Deliberate targets, each measured to
-    otherwise land inside the FIRST user query that needs them:
+    """One-time session warmup (data-independent; disable with
+    SPARK_GRAFT_WARMUP=0): grow the Python worker pool to ``cores`` workers
+    and import pandas in each. Worker spawn is ~60-100 ms each and pool
+    growth otherwise happens lazily at the first Arrow-batched stage wide
+    enough to need it (the r4 extract order A/B measured the same effect on
+    the extraction stage: first-in-session runs ~2x slower purely from
+    per-worker import + spawn; bench.py warms extraction for exactly this
+    reason — this generalizes the contract to every pandas/Arrow operator).
 
-    1. the Python worker pool — worker spawn is ~60-100 ms each and pool
-       growth happens lazily at the first Arrow-batched stage wide enough
-       to need it (the r4 extract order A/B measured the same effect on the
-       extraction stage: first-in-session runs ~2x slower purely from
-       per-worker import + spawn; bench.py warms extraction for exactly
-       this reason — this generalizes the contract to every pandas/Arrow
-       operator);
-    2. whole-stage-codegen + parquet read/write machinery — Janino, the
-       vectorized parquet reader, hash-agg and shuffle paths JIT on first
-       use; a tiny synthetic roundtrip moves that out of the first queries.
-
-    Everything here is synthetic (spark.range), nothing touches input data
-    or caches results — it is JVM/worker warmup, not precomputation."""
+    Synthetic input only (spark.range); nothing touches input data or
+    caches results. A failure logs a warning and never blocks the session."""
     from pyspark.sql import functions as F
 
     try:
+        # one wide Arrow stage; mapInPandas (not mapInArrow) so every worker
+        # also imports pandas here, not inside the first real pandas-UDF query
         base = spark.range(cores * 512).repartition(cores)
-        # (1) grow the Python worker pool to `cores` in one wide Arrow stage;
-        # mapInPandas (not mapInArrow) so every worker also imports pandas
-        # here, not inside the first real pandas-UDF query
         base.mapInPandas(lambda it: it, "id long").agg(F.count(F.lit(1))).collect()
-        # (2) codegen + shuffle + common expression classes
-        proj = base.select(
-            (F.col("id") % 7).alias("k"),
-            F.md5(F.col("id").cast("string")).alias("h"),
-        )
-        proj.groupBy("k").agg(
-            F.sum(F.col("id").cast("decimal(18,4)")),
-            F.count(F.lit(1)),
-        ).orderBy("k").collect()
-        # (3) parquet write + vectorized read (incl. DECIMAL decode) +
-        # filter pushdown path
-        d = tempfile.mkdtemp(prefix="maxx_warm_")
-        try:
-            proj.withColumn("v", F.col("id").cast("double")).withColumn(
-                "m", F.col("id").cast("decimal(18,4)")
-            ).write.mode("overwrite").parquet(f"{d}/w")
-            back = spark.read.parquet(f"{d}/w")
-            back.where(F.col("id") > 10).agg(
-                F.sum("v"), F.max("h"), F.sum("m")
-            ).collect()
-            # (4) window + sort-merge join machinery (UnsafeExternalSorter,
-            # SMJ iterators, WindowExec frames JIT once per JVM)
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("k").orderBy("id")
-            lhs = back.select("k", "id", F.row_number().over(w).alias("rn"))
-            rhs = back.select(F.col("k").alias("k2"), F.col("id").alias("id2"))
-            lhs.hint("merge").join(
-                rhs, (F.col("k") == F.col("k2")) & (F.col("id") == F.col("id2"))
-            ).agg(F.count(F.lit(1))).collect()
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
-    except Exception:
-        pass  # warmup is best-effort; a failure must never block a session
+    except Exception:  # noqa: BLE001 — warmup must never block a session
+        log.warning("session warmup (worker pool + pandas import) failed", exc_info=True)
 
 
 def get_spark(
@@ -126,11 +92,6 @@ def get_spark(
         # parquet scans: 128 MB splits are the right granularity for both
         # local[32] at sf0.1 and a 1000-executor cluster at 100 TB.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # answer bare MIN/MAX/COUNT aggregates from parquet footer
-        # statistics instead of scanning row groups (off by default; pure
-        # scan-level win at any scale — q09's watermark-chunk bounds agg
-        # is footer-only with it)
-        .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.shuffle.spill.compress", "true")
         # INT96 (the default) carries no parquet column statistics; the
         # sink's footer-based lineage needs min/max on the event-time column

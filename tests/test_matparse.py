@@ -254,24 +254,83 @@ def test_namespace_function(ref_files):
     assert byname["multiplier"].default == "2"
 
 
-# -- live scripts (test_livescripts.py) ---------------------------------------
+# -- live scripts (test_livescripts.py shapes, engine-owned inputs) -----------
+
+
+_LIVE_SCRIPT = """\
+%% Introduction
+% This live script squares a vector.
+% It has two text sections.
+
+%% Compute
+x = 1:3;
+y = x.^2;
+%% Empty
+
+%% Notes
+% The result is [1 4 9].
+%% Display
+disp(y)
+"""
 
 
 def test_plaintext_livescript():
-    src = (Path("/root/reference/tests/livescripts") / "demo_live.m").read_text()
-    sections = parse_plaintext_livescript(src)
+    sections = parse_plaintext_livescript(_LIVE_SCRIPT)
     kinds = [k for k, _ in sections]
     assert kinds[0] == "text"
     assert "code" in kinds
     assert all(c.strip() for _, c in sections)
+    # headers stripped, all-comment bodies are text, the empty section drops
+    assert sections == [
+        ("text", "% This live script squares a vector.\n% It has two text sections."),
+        ("code", "x = 1:3;\ny = x.^2;"),
+        ("text", "% The result is [1 4 9]."),
+        ("code", "disp(y)"),
+    ]
+
+
+def _mlx_bytes(paragraphs):
+    """A minimal .mlx archive: matlab/document.xml holding one w:p per
+    (style, [runs]) entry; style None leaves the paragraph unstyled."""
+    import io
+    import zipfile
+
+    ps = []
+    for style, runs in paragraphs:
+        ppr = f'<w:pPr><w:pStyle w:val="{style}"/></w:pPr>' if style else ""
+        rs = "".join(f"<w:r><w:t>{t}</w:t></w:r>" for t in runs)
+        ps.append(f"<w:p>{ppr}{rs}</w:p>")
+    xml = (
+        '<?xml version="1.0" encoding="UTF-8"?>'
+        '<w:document xmlns:w="http://schemas.openxmlformats.org/wordprocessingml/2006/main">'
+        f"<w:body>{''.join(ps)}</w:body></w:document>"
+    )
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        zf.writestr("matlab/document.xml", xml)
+    return buf.getvalue()
 
 
 def test_binary_mlx():
-    data = (Path("/root/reference/tests/livescripts") / "demo_binary.mlx").read_bytes()
+    data = _mlx_bytes([
+        ("heading", ["Squares"]),
+        ("text", ["Compute the ", "squares."]),
+        ("matlab-Code", ["x = 1:3;"]),
+        ("matlab-Code", ["y = x.^2;"]),
+        (None, ["Show it:"]),
+        ("matlab-Code", ["disp(y)"]),
+    ])
     sections = parse_mlx_bytes(data)
     assert len(sections) >= 2
     assert any(k == "code" for k, _ in sections)
     assert any(k == "text" for k, _ in sections)
+    # consecutive same-kind paragraphs merge; runs concatenate
+    assert sections == [
+        ("text", "Squares\nCompute the squares."),
+        ("code", "x = 1:3;\ny = x.^2;"),
+        ("text", "Show it:"),
+        ("code", "disp(y)"),
+    ]
 
 
 # -- byte-identity invariant ---------------------------------------------------

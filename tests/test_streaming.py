@@ -407,60 +407,6 @@ def test_tick_keys_are_salted(spark):
     assert max(r["count"] for r in counts) <= 2 * n / TICK_SALT
 
 
-def test_resolver_tws_matches_applyinpandas(spark, tmp_path):
-    """The transformWithState resolver (north-rule wording) produces the
-    same resolved set as the applyInPandasWithState one, including the
-    unresolved timer flush — run on RocksDB (the API's required provider).
-
-    transformWithState's Python state protocol rides on protobuf, which is
-    not baked into this sandbox (and installs are disallowed) — the module
-    is complete and this test runs wherever protobuf exists."""
-    pytest.importorskip(
-        "google.protobuf", reason="transformWithState state protocol needs protobuf"
-    )
-    from maxx_spark.extract import extract_code_units
-    from maxx_spark.streaming.resolver_tws import resolve_bases_tws
-
-    t0 = dt.datetime(2024, 6, 2, 9, 0, 0)
-    batches = [
-        [("https://h7/x/Leaf.m", t0 + dt.timedelta(seconds=2), None, "classdef Leaf < Mid\nend", "matlab")],
-        [("https://h7/x/Mid.m", t0, None, "classdef Mid < Base\nend", "matlab"),
-         ("https://h7/x/Orphan.m", t0 + dt.timedelta(seconds=1), None, "classdef Orphan < Nowhere\nend", "matlab")],
-        [("https://h7/x/Base.m", t0 + dt.timedelta(seconds=3), None, "classdef Base\nend", "matlab")],
-        [("https://h7/x/hb.m", t0 + dt.timedelta(hours=1), None, "x=1;", "matlab")],
-        [("https://h7/x/hb2.m", t0 + dt.timedelta(hours=2), None, "x=2;", "matlab")],
-    ]
-    src = str(tmp_path / "twssrc")
-    import time as _time
-
-    for off, rows in enumerate(batches):
-        before = set(glob.glob(f"{src}/*.parquet"))
-        spark.createDataFrame(rows, PAGES).coalesce(1).write.mode("append").parquet(src)
-        now = _time.time()
-        for f in set(glob.glob(f"{src}/*.parquet")) - before:
-            os.utime(f, (now + off * 60, now + off * 60))
-
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        pages = spark.readStream.schema(PAGES).option("maxFilesPerTrigger", "1").parquet(src)
-        resolved = resolve_bases_tws(extract_code_units(pages))
-        run_to_memory(resolved, "tws_t", str(tmp_path / "ck_tws"))
-    finally:
-        if old:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    rows = spark.sql("select * from tws_t").collect()
-    got = {(r["identifier"], r["derived"], r["resolved"]) for r in rows}
-    assert ("Base", "Mid", True) in got      # need waited for def
-    assert ("Mid", "Leaf", True) in got      # def waited for need
-    assert ("Nowhere", "Orphan", False) in got  # timer flush, unresolved
-
-
 def test_extraction_query_glob_root(spark, tmp_path):
     """P1 streaming form: with a glob_root, pages outside the root's
     membership (top-level private, Contents.m) never reach the extractor."""
@@ -482,14 +428,12 @@ def test_extraction_query_glob_root(spark, tmp_path):
     assert not any("/helpers/" in u for u in urls)              # plain below +pkg
 
 
-def _horizon_stress(spark, tmp_path, resolver_fn, sink_name):
-    """Shared body for the E6 state-horizon stress: 10,000 state keys
-    streamed across 10 event-time epochs 20 minutes apart; event-time
-    eviction must hold live state at the watermark horizon (~the last 3
-    epochs), never the corpus total — the README's "state tracks the live
-    crawl horizon, not the corpus" claim, measured on the engine's own
-    state-store metrics. Run against both stateful backends (applyInPandas
-    WithState and the transformWithState twin)."""
+def test_resolver_state_tracks_horizon_not_corpus(spark, tmp_path):
+    """E6 state-horizon stress: 10,000 state keys streamed across 10
+    event-time epochs 20 minutes apart; event-time eviction must hold live
+    state at the watermark horizon (~the last 3 epochs), never the corpus
+    total — the README's "state tracks the live crawl horizon, not the
+    corpus" claim, measured on the engine's own state-store metrics."""
     import time as _time
 
     src = str(tmp_path / "horizon_src")
@@ -518,13 +462,13 @@ def _horizon_stress(spark, tmp_path, resolver_fn, sink_name):
             os.utime(f, (now + e * 60, now + e * 60))  # mtime = batch order
 
     units = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
-    resolved = resolver_fn(units, delay="10 minutes")
-    q = run_to_memory(resolved, sink_name, str(tmp_path / "horizon_ck"))
+    resolved = resolve_bases_stream(units, delay="10 minutes")
+    q = run_to_memory(resolved, "horizon_t", str(tmp_path / "horizon_ck"))
 
     # epochs whose +10min timers sit below the final watermark flushed their
     # pending needs as unresolved rows: epochs 0..6 by the last batch
     # (watermark in batch j derives from batches < j)
-    rows = spark.sql(f"select * from {sink_name}").collect()
+    rows = spark.sql("select * from horizon_t").collect()
     unresolved = [r for r in rows if not r["resolved"]]
     assert len(unresolved) >= per_epoch * (n_epochs - 3), len(unresolved)
 
@@ -539,36 +483,6 @@ def _horizon_stress(spark, tmp_path, resolver_fn, sink_name):
     # continuously, not only at the end
     peak = max(p["stateOperators"][0]["numRowsTotal"] for p in progresses)
     assert peak < total_keys, (peak, total_keys)
-
-
-def test_resolver_state_tracks_horizon_not_corpus(spark, tmp_path):
-    _horizon_stress(spark, tmp_path, resolve_bases_stream, "horizon_t")
-
-
-def test_resolver_tws_state_tracks_horizon_not_corpus(spark, tmp_path):
-    """VERDICT r5 item 8: the same horizon bound on the transformWithState
-    twin. Activation: runs wherever ``google.protobuf`` is importable (the
-    TWS Python state protocol's wire format) — absent in this sandbox, so
-    it env-skips here; any CI image with protobuf runs it automatically,
-    no opt-in flag needed. Requires the RocksDB state-store provider
-    (transformWithState's only supported backend)."""
-    pytest.importorskip(
-        "google.protobuf", reason="transformWithState state protocol needs protobuf"
-    )
-    from maxx_spark.streaming.resolver_tws import resolve_bases_tws
-
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        _horizon_stress(spark, tmp_path, resolve_bases_tws, "horizon_tws_t")
-    finally:
-        if old:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 def test_streaming_funnel_matches_batch(spark, tmp_path):

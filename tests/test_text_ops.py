@@ -374,10 +374,22 @@ def test_length_percentiles_exact(spark):
     assert (out["src1"]["n_docs"], out["src1"]["p50"], out["src1"]["p99"]) == (1, 5, 5)
 
 
-def test_dedup_df_modes_equivalent(spark):
-    """_capped_shingles df_mode='join' (the AQE-splittable default since
-    r6) must produce byte-identical q12 output to the count-window form
-    (kept for single-box squeezing)."""
+def test_dedup_capped_pairs_exact(spark):
+    """q12 on a five-doc corpus, checked against hand-derived pairs.
+
+    Word 3-gram shingles (t1..t6 shared by d0/d1/d3, t7 "the lazy dog",
+    t8 "the lazy cat"):
+      d0 = d3 = {t1..t7} (7), d1 = {t1..t6, t8} (7),
+      d2 = 8 unique shingles, d4 = 3 distinct shingles repeated 30x.
+    Doc frequencies: t1..t6 -> 3, t7 -> 2, every other shingle -> 1 (d4's
+    in-doc repeats count once).
+
+    max_df=3 keeps every shingle:
+      (0,1): inter 6, union 7+7-6 = 8;  (0,3): inter 7, union 7;
+      (1,3): inter 6, union 8;  d2 and d4 share nothing.
+    max_df=2 drops t1..t6: d0 = d3 = {t7}, d1 = {t8}, so only
+      (0,3): inter 1, union 1 survives.
+    """
     from maxx_spark.operators.dedup import ngram_jaccard_pairs
 
     rows = [
@@ -388,9 +400,10 @@ def test_dedup_df_modes_equivalent(spark):
         " ".join(["viral gram here"] * 30),  # repeated shingle inside one doc
     ]
     docs = _docs(spark, rows)
-    a = sorted(tuple(r) for r in ngram_jaccard_pairs(docs, max_df=3).collect())
-    b = sorted(tuple(r) for r in ngram_jaccard_pairs(docs, max_df=3, df_mode="window").collect())
-    assert a == b and len(a) > 0
+    got = [tuple(r) for r in ngram_jaccard_pairs(docs, max_df=3).collect()]
+    assert got == [(0, 1, 6, 8), (0, 3, 7, 7), (1, 3, 6, 8)]
+    got = [tuple(r) for r in ngram_jaccard_pairs(docs, max_df=2).collect()]
+    assert got == [(0, 3, 1, 1)]
 
 
 def test_minhash_string_index_equivalent(spark, sf_dir):
