@@ -69,7 +69,7 @@ def main() -> None:
     wall = time.perf_counter() - t0
 
     n_units = sink.read_committed(spark).count()
-    s = listener.summary()
+    s = listener.summary(q)
     print(
         json.dumps(
             {

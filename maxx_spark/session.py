@@ -9,6 +9,16 @@ every knob is chosen to also be the right *shape* at cluster scale:
 - shuffle.partitions defaults to cores*2 locally; on a real cluster this is
   overridden (or left to AQE coalescing from a high initial number).
 
+On a ``local*`` master every Python worker is forked from the engine's
+daemon, ``maxx_spark.worker_daemon`` (``spark.python.daemon.module``), whose
+zip importers re-read ``pyspark.zip`` only when it changes; that removes
+~0.27 s of CPU from every Python task. ``get_spark`` prepends the package
+root to ``spark.executorEnv.PYTHONPATH`` so the daemon imports from any
+working directory. Other masters keep Spark's own daemon, because the
+driver's package root is not a path on their executors; a cluster opts in by
+installing the package on every executor and setting
+``spark.python.daemon.module`` in ``extra_conf``.
+
 ``get_spark`` also runs a one-time session warmup that grows the Python
 worker pool and imports pandas in every worker (``SPARK_GRAFT_WARMUP=0``
 disables it).
@@ -23,12 +33,16 @@ from pyspark.sql import SparkSession
 
 log = logging.getLogger(__name__)
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+
 
 def _warm_session(spark: SparkSession, cores: int) -> None:
     """One-time session warmup (data-independent; disable with
     SPARK_GRAFT_WARMUP=0): grow the Python worker pool to ``cores`` workers
-    and import pandas in each. Worker spawn is ~60-100 ms each and pool
-    growth otherwise happens lazily at the first Arrow-batched stage wide
+    and import pandas in each. Workers fork from the daemon (on a local
+    master the engine's ``maxx_spark.worker_daemon``); each fork plus its first pandas import
+    otherwise happens lazily at the first Arrow-batched stage wide
     enough to need it (the r4 extract order A/B measured the same effect on
     the extraction stage: first-in-session runs ~2x slower purely from
     per-worker import + spawn; bench.py warms extraction for exactly this
@@ -64,6 +78,14 @@ def get_spark(
             cores = os.cpu_count() or 8
     if shuffle_partitions is None:
         shuffle_partitions = max(cores * 2, 8)
+    conf = dict(extra_conf or {})
+    if master.startswith("local"):
+        # local executors see the driver's filesystem, so workers can import
+        # the engine's daemon from the package root (module docstring)
+        conf.setdefault("spark.python.daemon.module", "maxx_spark.worker_daemon")
+        conf[_WORKER_PYTHONPATH] = os.pathsep.join(
+            p for p in (_PACKAGE_ROOT, conf.get(_WORKER_PYTHONPATH)) if p
+        )
 
     b = (
         SparkSession.builder.appName(app_name)
@@ -97,7 +119,7 @@ def get_spark(
         # sink's footer-based lineage needs min/max on the event-time column
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

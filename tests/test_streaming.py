@@ -667,3 +667,78 @@ def test_streaming_funnel_resumes_from_checkpoint(spark, tmp_path):
     all_events = spark.read.schema(schema).parquet(src)
     batch_n = {r["step_idx"]: r["n_users"] for r in event_funnel(all_events).collect()}
     assert batch_n == {i: sum(1 for u in got_all if u[1] == i) for i in range(3)}
+
+
+def _staged_files(spark, src, batches, schema):
+    """Append one parquet file per batch, with strictly increasing mtimes
+    (the file source orders a trigger's files by modification time)."""
+    import time as _time
+
+    now = _time.time()
+    for k, rows in enumerate(batches):
+        before = set(glob.glob(f"{src}/*.parquet"))
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
+        for f in set(glob.glob(f"{src}/*.parquet")) - before:
+            os.utime(f, (now + 60 * k, now + 60 * k))
+
+
+def _with_listener(spark, run):
+    from maxx_spark.streaming.metrics import ThroughputListener
+
+    listener = ThroughputListener()
+    spark.streams.addListener(listener)
+    try:
+        return listener, run()
+    finally:
+        spark.streams.removeListener(listener)
+
+
+def test_throughput_summary_includes_last_batch(spark, tmp_path):
+    """Right after awaitTermination() the last batch's progress event may
+    not have been delivered; summary(query) reads the query's own
+    progress, so all three one-file batches are there. With the query
+    keeping only its last two progress entries, the first batch comes from
+    the listener's events."""
+    schema = "id long, ts timestamp"
+    src = str(tmp_path / "three")
+    t0 = dt.datetime(2024, 1, 1)
+    _staged_files(spark, src, [[(k, t0)] for k in range(3)], schema)
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+    retention = "spark.sql.streaming.numRecentProgressUpdates"
+    spark.conf.set(retention, "2")
+    try:
+        listener, q = _with_listener(
+            spark, lambda: run_to_memory(stream, "three_t", str(tmp_path / "ck_three"))
+        )
+    finally:
+        spark.conf.unset(retention)
+    assert 0 not in [p.batchId for p in q.recentProgress]
+    s = listener.summary(q)
+    assert s["batches"] == 3 and s["input_rows"] == 3
+    assert [b["batch_id"] for b in s["detail"]] == [0, 1, 2]
+
+
+def test_throughput_summary_reports_state(spark, tmp_path):
+    """The per-batch ledger carries the state operators' rows and memory,
+    late drops and the watermark: the funnel buffers the first batch's
+    events in state until a heartbeat moves the watermark past them."""
+    from maxx_spark.streaming.cep import funnel_stream
+
+    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
+    src = str(tmp_path / "funnel_state")
+    t0 = dt.datetime(2024, 8, 1, 9, 0, 0)
+    _staged_files(spark, src, [
+        [(0, t0, 1, "view", 1.0, "{}"), (1, t0 + dt.timedelta(minutes=1), 2, "view", 1.0, "{}")],
+        [(2, t0 + dt.timedelta(hours=3), 99, "noop", 1.0, "{}")],
+    ], schema)
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+    out = funnel_stream(stream, delay="10 minutes", deadline="1 hour")
+    listener, q = _with_listener(
+        spark, lambda: run_to_memory(out, "funnel_state_t", str(tmp_path / "ck_fs"))
+    )
+    detail = listener.summary(q)["detail"]
+    assert len(detail) == 2
+    first = detail[0]
+    assert first["state_rows_total"] > 0 and first["state_memory_bytes"] > 0
+    assert first["rows_dropped_by_watermark"] == 0
+    assert detail[1]["watermark"] > first["watermark"]
