@@ -348,8 +348,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q10_salted_agg": lambda s, d: W.salted_agg(_t(s, d, "events")["events"]),
         # dedup suite
         "q11_exact_dedup": lambda s, d: D.exact_dedup(_t(s, d, "documents")["documents"]),
-        "q12_ngram_jaccard": lambda s, d: D.ngram_jaccard_pairs(_t(s, d, "documents")["documents"]),
-        "q13_minhash_lsh": lambda s, d: D.minhash_lsh_pairs(_t(s, d, "documents")["documents"]),
+        "q12_ngram_jaccard": lambda s, d: D.ngram_jaccard_pairs(dedup_index(s, d)),
+        "q13_minhash_lsh": lambda s, d: D.minhash_lsh_pairs(dedup_index(s, d)),
         "q14_simhash": lambda s, d: D.simhash32(_t(s, d, "documents")["documents"]),
         # text analysis suite
         "q15_lang_id": lambda s, d: T.lang_id(_t(s, d, "documents")["documents"]),
@@ -363,7 +363,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # per-source health, contamination scan
         "q42_top_terms": lambda s, d: T.top_terms(_t(s, d, "documents")["documents"]),
         "q43_source_quality": lambda s, d: T.source_quality(_t(s, d, "documents")["documents"]),
-        "q44_dedup_clusters": lambda s, d: D.dedup_clusters(_t(s, d, "documents")["documents"]),
+        "q44_dedup_clusters": lambda s, d: D.dedup_clusters(dedup_index(s, d)),
         "q45_contamination": lambda s, d: T.contamination_check(_t(s, d, "documents")["documents"]),
         "q55_vocab_build": lambda s, d: T.vocab_build(_t(s, d, "documents")["documents"]),
         # dataset assembly: split / pack / mix / stratify
@@ -382,10 +382,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q56_decontamination_overlap": lambda s, d: T.decontamination_overlap(_t(s, d, "documents")["documents"]),
         "q57_pii_scan": _q_pii_scan,
         "q58_lexical_diversity": lambda s, d: T.lexical_diversity(_t(s, d, "documents")["documents"]),
-        "q60_dup_span_fraction": lambda s, d: D.duplicated_span_stats(_t(s, d, "documents")["documents"]),
+        "q60_dup_span_fraction": lambda s, d: D.duplicated_span_stats(dedup_index(s, d, n=5)),
         "q61_quality_classifier": lambda s, d: T.quality_classifier(_t(s, d, "documents")["documents"]),
         "q62_token_histogram": lambda s, d: T.token_histogram(_t(s, d, "documents")["documents"]),
-        "q63_source_overlap": lambda s, d: D.source_ngram_overlap(_t(s, d, "documents")["documents"]),
+        "q63_source_overlap": lambda s, d: D.source_ngram_overlap(dedup_index(s, d)),
         "q64_funnel_steps": lambda s, d: W.event_funnel(_t(s, d, "events")["events"]),
         "q66_session_paths": lambda s, d: W.session_event_paths(_t(s, d, "events")["events"]),
         "q67_length_percentiles": lambda s, d: T.length_percentiles(_t(s, d, "documents")["documents"]),
@@ -483,17 +483,65 @@ def _q_searchpath(s: SparkSession) -> DataFrame:
     ).orderBy("host", "unit_path", "kind", "url")
 
 
-def _gen_units(s: SparkSession):
-    from maxx_spark.extract import extract_code_units
-    from maxx_spark.gen import generate_pages_df
+class _Artifacts:
+    """Owner of the cached tables queries share within one session: a
+    DedupIndex per n over ONE corpus (q12/q13/q44/q63 at n=3, q60 at n=5)
+    and the golden extraction units (q23-q26, q33-q35, q37, q40 all derive
+    from one generated corpus and several branch it internally — uncached,
+    each branch re-runs the Python extraction stage). Each is built on
+    first use. Asking for another session or sf_dir releases what is held
+    first, so at most one corpus is pinned at a time."""
 
-    # cached (r7): every extraction-layer golden query (q23-q26, q33-q35,
-    # q37, q40) derives from this same generated corpus, and several
-    # branch the units table internally (q40 walks 10 point lookups, MRO /
-    # inheritance self-join it) — without the cache each branch re-runs
-    # the Python extraction stage. One canonical plan -> one
-    # materialization per session; results are byte-identical.
-    return extract_code_units(generate_pages_df(s, n_projects=2, n_filler=50)).cache()
+    def __init__(self):
+        self.spark: SparkSession | None = None
+        self.sf_dir: str | None = None
+        self.indexes: dict[int, D.DedupIndex] = {}
+        self.units: DataFrame | None = None
+
+    def _session(self, s: SparkSession) -> None:
+        if s is not self.spark:
+            self.release()
+            self.spark = s
+
+    def dedup_index(self, s: SparkSession, sf_dir: str, n: int = 3) -> D.DedupIndex:
+        """The session's DedupIndex over ``sf_dir``'s documents at ``n``."""
+        self._session(s)
+        if sf_dir != self.sf_dir:
+            self._release_indexes()
+            self.sf_dir = sf_dir
+        if n not in self.indexes:
+            docs = load_tables(s, sf_dir, ("documents",))["documents"]
+            self.indexes[n] = D.DedupIndex(docs, n=n)
+        return self.indexes[n]
+
+    def gen_units(self, s: SparkSession) -> DataFrame:
+        from maxx_spark.extract import extract_code_units
+        from maxx_spark.gen import generate_pages_df
+
+        self._session(s)
+        if self.units is None:
+            self.units = extract_code_units(generate_pages_df(s, n_projects=2, n_filler=50)).cache()
+        return self.units
+
+    def _release_indexes(self) -> None:
+        for idx in self.indexes.values():
+            idx.release()
+        self.indexes.clear()
+
+    def release(self) -> None:
+        """Unpersist every table held; the next use rebuilds it. A stopped
+        session's caches died with it, so those are only dropped."""
+        if self.spark is not None and self.spark.sparkContext._jsc is not None:
+            self._release_indexes()
+            if self.units is not None:
+                self.units.unpersist()
+        self.__init__()
+
+
+_ARTIFACTS = _Artifacts()
+dedup_index = _ARTIFACTS.dedup_index
+release = _ARTIFACTS.release
+_gen_units = _ARTIFACTS.gen_units
 
 
 def _q_point_lookup(s: SparkSession) -> DataFrame:

@@ -103,38 +103,29 @@ def _run_suite(spark, sf_dir: str) -> dict:
             F.bit_xor(F.xxhash64(*[F.col(c).cast("string") for c in df.columns])).alias("h")
         ).collect()
         out[name] = round(time.perf_counter() - t0, 3)
-    # composed dedup pipeline: build the shingle-key inverted index ONCE,
-    # feed all five dedup consumers (q12/q13/q44/q60/q63 at a shared n=3) —
-    # the 100 TB shape, where the index is the dominant build cost and a
-    # pipeline never rebuilds it per operator. Reported OUTSIDE the
-    # headline total (names don't start with "q"): the solo rows above
-    # already count each operator once.
+    # composed dedup pipeline: ONE shingle-key index owner at n=3 (the
+    # session's, which the solo rows above already filled) feeds all five
+    # dedup consumers (q12/q13/q44/q60/q63) — the 100 TB shape, where the
+    # index is the dominant build cost and a pipeline never rebuilds it per
+    # operator. Reported OUTSIDE the headline total (names don't start with
+    # "q"): the solo rows above already count each operator once.
     try:
         from pyspark.sql import functions as F
 
-        from maxx_spark.operators.dedup import (
-            dedup_clusters,
-            duplicated_span_stats,
-            minhash_lsh_pairs,
-            ngram_jaccard_pairs,
-            source_ngram_overlap,
-            word_shingle_keys,
-        )
-        from maxx_spark.session import load_tables
+        from maxx_spark.operators import dedup as D
 
-        docs = load_tables(spark, sf_dir, ("documents",))["documents"]
         t0 = time.perf_counter()
-        idx = word_shingle_keys(docs, 3).persist()
-        idx.count()
+        idx = e.dedup_index(spark, sf_dir, 3)
+        idx.keys.count()
         build_s = time.perf_counter() - t0
-        for fn in (ngram_jaccard_pairs, minhash_lsh_pairs, dedup_clusters,
-                   duplicated_span_stats, source_ngram_overlap):
-            df = fn(docs, n=3, index=idx)
+        for fn in (D.ngram_jaccard_pairs, D.minhash_lsh_pairs, D.dedup_clusters,
+                   D.duplicated_span_stats, D.source_ngram_overlap):
+            df = fn(idx)
             df.select(
                 F.bit_xor(F.xxhash64(*[F.col(c).cast("string") for c in df.columns])).alias("h")
             ).collect()
         total_s = time.perf_counter() - t0
-        idx.unpersist()
+        e.release()
         out["dedup_shared_index_build"] = round(build_s, 3)
         out["dedup_shared_index_total"] = round(total_s, 3)
         solo = sum(

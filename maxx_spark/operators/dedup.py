@@ -7,6 +7,10 @@
   with exact Jaccard — the scale path (the shingle self-join above is
   quadratic in shingle-frequency; LSH bounds the join to band-bucket
   collisions).
+- DedupIndex: the one owner of the artifacts those consumers share over a
+  corpus (shingle-key index, df-capped index, MinHash bands and verified
+  pairs) — built and pinned on first use, freed by release(). The
+  operators take an owner and never persist anything themselves.
 - simhash32: 32-bit SimHash fingerprint per document (32 bits keeps every
   per-bit conditional sum in one BIGINT expression tree; the (h >> i) & 1
   construction generalizes to 64 if ever needed).
@@ -27,6 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 # 61-bit Mersenne prime — all minhash arithmetic stays < 2^63 after mod.
 _P = (1 << 61) - 1
@@ -52,8 +57,9 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
     )
 
 
-def word_shingles(documents: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, shingle) distinct pairs, word n-grams. Pure built-ins:
+def _word_ngrams(documents: DataFrame, n: int, wrap) -> DataFrame:
+    """(doc_id, shingle) distinct pairs over word ``n``-grams, each n-gram
+    passed through ``wrap`` INSIDE the array transform. Pure built-ins:
     split once (projected so it isn't recomputed per lambda), slide via
     transform over an index range, element_at + concat_ws per position —
     element_at is O(1) array indexing where slice() copies a sub-array per
@@ -61,9 +67,9 @@ def word_shingles(documents: DataFrame, n: int = 3) -> DataFrame:
 
     Within-doc dedup happens LOCALLY via array_distinct before the explode
     (a doc's shingle multiset lives in one row), so the output is distinct
-    by construction with ZERO exchanges — the previous global
-    ``.distinct()`` shuffled the whole exploded (doc_id, shingle-string)
-    index, the single largest intermediate in the dedup pipeline.
+    by construction with ZERO exchanges — a global ``.distinct()`` would
+    shuffle the whole exploded index, the single largest intermediate in
+    the dedup pipeline.
     """
     d = documents.select("doc_id", F.split(normalized(F.col("text")), " ").alias("__w"))
     w = F.col("__w")
@@ -73,9 +79,15 @@ def word_shingles(documents: DataFrame, n: int = 3) -> DataFrame:
         F.size(w) >= n, F.sequence(F.lit(0), F.size(w) - n)
     ).otherwise(F.expr("array()").cast("array<int>"))
     sh = F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.element_at(w, i + k + 1) for k in range(n)])
+        idx, lambda i: wrap(F.concat_ws(" ", *[F.element_at(w, i + k + 1) for k in range(n)]))
     )
     return d.select("doc_id", F.explode(F.array_distinct(sh)).alias("shingle"))
+
+
+def word_shingles(documents: DataFrame, n: int = 3) -> DataFrame:
+    """(doc_id, shingle) distinct pairs with the n-gram STRING as shingle
+    (decontamination_overlap matches it against probe text)."""
+    return _word_ngrams(documents, n, lambda g: g)
 
 
 def word_shingle_keys(documents: DataFrame, n: int = 3) -> DataFrame:
@@ -86,22 +98,10 @@ def word_shingle_keys(documents: DataFrame, n: int = 3) -> DataFrame:
     n-gram strings (~25-40 bytes at n=3), and the minhash stage reuses the
     key directly instead of re-hashing per row. md5i (not xxhash64) so the
     DuckDB oracle reproduces the keyspace bit-exactly — hash collisions
-    (~n²/2^57) merge the same shingles on both engines.
-
-    Same construction as word_shingles otherwise: hash per array element,
-    array_distinct BEFORE the explode (zero exchanges; collisions collapse
-    locally exactly as DISTINCT-over-hash does in the oracle).
+    (~n²/2^57) merge the same shingles on both engines, and array_distinct
+    collapses them locally exactly as DISTINCT-over-hash does there.
     """
-    d = documents.select("doc_id", F.split(normalized(F.col("text")), " ").alias("__w"))
-    w = F.col("__w")
-    idx = F.when(
-        F.size(w) >= n, F.sequence(F.lit(0), F.size(w) - n)
-    ).otherwise(F.expr("array()").cast("array<int>"))
-    sh = F.transform(
-        idx,
-        lambda i: md5i(F.concat_ws(" ", *[F.element_at(w, i + k + 1) for k in range(n)])),
-    )
-    return d.select("doc_id", F.explode(F.array_distinct(sh)).alias("shingle"))
+    return _word_ngrams(documents, n, md5i)
 
 
 def _capped_shingles(idx: DataFrame, max_df: int) -> DataFrame:
@@ -146,36 +146,138 @@ def _jaccard_verify(sh: DataFrame, inter: DataFrame, threshold: float) -> DataFr
     )
 
 
-def ngram_jaccard_pairs(
-    documents: DataFrame,
-    n: int = 3,
-    threshold: float = 0.05,
-    max_df: int = 64,
-    index: DataFrame | None = None,
-) -> DataFrame:
-    """Exact Jaccard near-dup pairs via inverted index self-join (on the
-    stop-shingle-filtered universe, see _capped_shingles).
+class DedupIndex:
+    """Owner of the artifacts the dedup operators share over ONE corpus at
+    one ``n`` (q12 n-gram Jaccard, q13 MinHash-LSH, q44 clusters, q63
+    source overlap; q60 reads only its corpus and n): the md5i index
+    (``keys``), its df-capped form (``capped``) and, per MinHash setting,
+    the banded table, candidate shingles and verified pairs
+    (``minhash_pairs``).
 
-    ``index``: optional pre-built ``word_shingle_keys(documents, n)`` table
-    — a 100 TB pipeline running several dedup consumers (q12/q13/q44/q60)
-    builds the (doc_id, shingle-key) inverted index ONCE, persists it, and
-    passes it to each; the caller owns persistence and must build it from
-    the SAME documents at the SAME n. Default (None) builds it inline.
+    Each artifact is built and ``cache()``d on FIRST use, so it
+    materializes inside the first consumer's job and no cost moves outside
+    that consumer's clock; later consumers read the pinned table.
+    ``release()`` unpersists all of them and the next use rebuilds them.
+    Operators never persist anything themselves. Spark matches cached plans
+    canonically, so an artifact whose plan other code already cached is
+    read from that cache and left to it on release(); keep one owner per
+    corpus so every artifact has exactly one.
+    """
+
+    def __init__(self, documents: DataFrame, n: int = 3, max_df: int = 64):
+        self.documents = documents
+        self.n = n
+        self.max_df = max_df
+        self._pinned: dict = {}
+        self._owned: list[DataFrame] = []
+
+    def _pin(self, key, build) -> DataFrame:
+        if key not in self._pinned:
+            df = build()
+            if df.storageLevel == StorageLevel.NONE:
+                self._owned.append(df)
+            self._pinned[key] = df.cache()
+        return self._pinned[key]
+
+    def release(self) -> None:
+        """Unpersist every artifact this owner cached; the next use
+        rebuilds it."""
+        for df in self._owned:
+            df.unpersist()
+        self._owned.clear()
+        self._pinned.clear()
+
+    @property
+    def keys(self) -> DataFrame:
+        """word_shingle_keys at ``n``, read by q12/q13/q63 and twice by the
+        df cap (idx ⨝ df-rollup(idx)); unpinned, each read re-scans and
+        re-hashes the corpus, the heaviest map work here."""
+        return self._pin("keys", lambda: word_shingle_keys(self.documents, self.n))
+
+    @property
+    def capped(self) -> DataFrame:
+        """``keys`` without stop-shingles (_capped_shingles): the universe
+        q12 and q13's verify both compute Jaccard on."""
+        return self._pin("capped", lambda: _capped_shingles(self.keys, self.max_df))
+
+    def minhash_pairs(self, num_hashes: int, bands: int, threshold: float) -> DataFrame:
+        """Verified MinHash-LSH pairs (see minhash_lsh_pairs): the artifact
+        clustering and reporting re-read, orders of magnitude smaller than
+        the index that produced it."""
+        return self._pin(
+            ("pairs", num_hashes, bands, threshold),
+            lambda: self._verify_candidates(num_hashes, bands, threshold),
+        )
+
+    def _banded(self, num_hashes: int, bands: int) -> DataFrame:
+        """(doc_id, band_id, band_hash), pinned: the candidate self-join
+        reads it on both sides and would otherwise run the signature
+        aggregation once PER SIDE (measured 2x at sf0.1). The mins and band
+        hashes are compact SQL strings: the chained-Column form cost ~3.5 s
+        of py4j/driver time per build (r7, identical analyzed plans)."""
+
+        def build():
+            r = num_hashes // bands
+            mins = [
+                F.expr(f"min(({a} * (shingle % {1 << 31}) + {b}) % {_P})").alias(f"h{i}")
+                for i, (a, b) in enumerate(minhash_params(num_hashes))
+            ]
+            band_md5 = ", ".join(
+                "md5(concat_ws(',', {cols}))".format(
+                    cols=", ".join(f"cast(h{bi * r + j} as string)" for j in range(r))
+                )
+                for bi in range(bands)
+            )
+            return self.keys.groupBy("doc_id").agg(*mins).selectExpr(
+                "doc_id", f"posexplode(array({band_md5})) as (band_id, band_hash)"
+            )
+
+        return self._pin(("banded", num_hashes, bands), build)
+
+    def _verify_candidates(self, num_hashes: int, bands: int, threshold: float) -> DataFrame:
+        banded = self._banded(num_hashes, bands)
+        cand = (
+            banded.alias("x")
+            .join(banded.alias("y"), ["band_id", "band_hash"])
+            .where(F.col("x.doc_id") < F.col("y.doc_id"))
+            .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
+            .distinct()
+        )
+        # Exact verification of candidates only: the GLOBAL capped universe
+        # (df is corpus-wide by definition, as in the oracle) restricted to
+        # candidate docs, joined without a broadcast hint (AQE broadcasts
+        # the id set at runtime when small). At corpus scale the verify
+        # shuffle carries O(candidate shingles), not the whole index; at
+        # local scale it was a wash (r7 A/B at sf0.1/local[32]: q13 +4 s,
+        # q44 -4 s). Pinned: the sizes and the intersection both read it.
+        cand_ids = (
+            cand.select(F.col("doc_a").alias("doc_id"))
+            .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
+            .distinct()
+        )
+        sh = self._pin(
+            ("cand_shingles", num_hashes, bands), lambda: self.capped.join(cand_ids, "doc_id")
+        )
+        a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+        b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
+        inter = (
+            cand.join(a, "doc_a").join(b, ["doc_b", "shingle"])
+            .groupBy("doc_a", "doc_b")
+            .agg(F.count(F.lit(1)).alias("inter_size"))
+        )
+        return _jaccard_verify(sh, inter, threshold)
+
+
+def ngram_jaccard_pairs(index: DedupIndex, threshold: float = 0.05) -> DataFrame:
+    """Exact Jaccard near-dup pairs via inverted index self-join on the
+    owner's stop-shingle-filtered universe (``index.capped``, see
+    _capped_shingles).
 
     |A∩B| from the shingle join; |A|,|B| from per-doc counts (see
     _jaccard_verify). Emits (doc_a, doc_b, inter_size, union_size) with
     doc_a < doc_b.
-
-    r7: the RAW index is pinned before the df cap — the df cap builds
-    the capped index as idx ⨝ (df rollup of idx), i.e. TWO passes over the
-    raw index; without the pin both passes re-scan and re-hash the corpus
-    (the single heaviest map work in the operator). Pinning also makes the
-    raw-index subtree canonically identical to the one minhash_lsh_pairs
-    caches, so a session running several dedup consumers materializes it
-    once even without an explicit ``index=``.
     """
-    sh0 = index if index is not None else word_shingle_keys(documents, n).cache()
-    sh = _capped_shingles(sh0, max_df).cache()
+    sh = index.capped
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     inter = (
@@ -202,196 +304,61 @@ def md5i(col, nhex: int = 14):
 
 
 def minhash_lsh_pairs(
-    documents: DataFrame,
-    num_hashes: int = 32,
-    bands: int = 8,
-    n: int = 3,
-    threshold: float = 0.05,
-    max_df: int = 64,
-    index: DataFrame | None = None,
+    index: DedupIndex, num_hashes: int = 32, bands: int = 8, threshold: float = 0.05
 ) -> DataFrame:
     """MinHash-LSH candidate pairs verified with exact Jaccard (the 100 TB
     dedup path): band the signature (rows_per_band = num_hashes/bands),
     bucket-join on (band_id, band_hash), then verify candidates exactly.
 
     Verification joins back to the shingle index only for candidate pairs —
-    at scale this is the difference between O(candidates) and O(n^2).
-
-    ``index``: optional pre-built shingle-key index shared across dedup
-    consumers (see ngram_jaccard_pairs) — caller owns persistence.
+    at scale this is the difference between O(candidates) and O(n^2). The
+    pipeline and its pinned stages live in DedupIndex.minhash_pairs.
     """
-    r = num_hashes // bands
-    # shared: signatures + verify (cache only the inline build; a passed
-    # index's persistence is the caller's)
-    sh0 = index if index is not None else word_shingle_keys(documents, n).cache()
-    # r7 build-cost note: the signature aggregate + banding are constructed
-    # as compact SQL strings (one py4j call per expression) instead of
-    # chained Column operators — the old form issued ~4.5k py4j round trips
-    # and re-analyzed the growing 32-aggregate tree at every transformation,
-    # ~3.5 s of DRIVER time per invocation at any scale (measured with
-    # cProfile; identical analyzed plans either way).
-    params = minhash_params(num_hashes)
-    if dict(sh0.dtypes)["shingle"] == "bigint":
-        x_sql = f"(shingle % {1 << 31})"
-    else:
-        x_sql = f"(cast(conv(substring(md5(shingle), 1, 14), 16, 10) as bigint) % {1 << 31})"
-    mins = [
-        F.expr(f"min(({a} * {x_sql} + {b}) % {_P})").alias(f"h{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    sig = sh0.groupBy("doc_id").agg(*mins)
-    band_md5 = ", ".join(
-        "md5(concat_ws(',', {cols}))".format(
-            cols=", ".join(f"cast(h{bi * r + j} as string)" for j in range(r))
-        )
-        for bi in range(bands)
-    )
-    banded = sig.selectExpr(
-        "doc_id", f"posexplode(array({band_md5})) as (band_id, band_hash)"
-    )
-    # cached: the candidate self-join would otherwise recompute the whole
-    # 32-min signature aggregation once PER SIDE (measured 2x at sf0.1);
-    # the banded table is |docs| x bands tiny rows. cache() (not an eager
-    # localCheckpoint, which embeds a fresh RDD id) keeps the subtree
-    # canonical, so a later consumer in the same session — dedup_clusters
-    # re-deriving the pair graph — cache-hits instead of recomputing.
-    banded = banded.cache()
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), ["band_id", "band_hash"])
-        .where(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    # exact verification of candidates only. The shingle universe is first
-    # restricted to CANDIDATE docs (ids appearing in any band collision):
-    # per-doc sizes and the intersection join only ever need those docs'
-    # shingles, and the candidate-id set is far smaller than the corpus —
-    # joined WITHOUT a broadcast hint (unbounded at worst case) so AQE
-    # broadcasts it at runtime when small; either way the expensive
-    # intersection shuffle now carries candidate shingles only, not the
-    # whole corpus index. The df stop-shingle filter stays GLOBAL (df
-    # counts are corpus-wide by definition, mirrored in the oracle).
-    # Tradeoff, measured A/B at sf0.1/local[32]: the filter makes the
-    # verify stage DEPEND on the banded pipeline (was an independent
-    # branch), so wall time is a wash at latency-bound local scale
-    # (q13 +4 s, q44 -4 s); at corpus scale the verify shuffle drops from
-    # O(corpus shingles) to O(candidate shingles), which dominates.
-    cand_ids = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    # Verify on the SAME df-capped-index definition ngram_jaccard_pairs
-    # uses (one canonical subtree — a session or composed pipeline running
-    # both operators materializes the capped universe once), restricted to
-    # candidate docs afterwards. Trade, documented: solo at corpus scale
-    # this orders the two index joins as (df cap ⨝ full index) then
-    # (⨝ candidates) — the pre-r7 order restricted to candidates first, so
-    # its second shuffle moved candidate rows only; the shared-subtree form
-    # instead makes the expensive capped index a reusable artifact, which
-    # is the composed-pipeline (and bench-suite) win, and both orders move
-    # the full raw index through exactly one shuffle either way.
-    sh = _capped_shingles(sh0, max_df).join(cand_ids, "doc_id").cache()
-    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        cand.join(a, "doc_a").join(b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter_size"))
-    )
-    return (
-        _jaccard_verify(sh, inter, threshold)
-        # r7: pin the verified pair list — the near-dup pair set is the
-        # artifact every downstream consumer (clustering, span stats,
-        # reporting) reads repeatedly, and it is orders of magnitude
-        # smaller than the corpus index that produced it. In a session
-        # running q13 then q44 the clustering consumes these cached pairs
-        # instead of re-deriving signatures + candidates from scratch.
-        .cache()
-    )
+    return index.minhash_pairs(num_hashes, bands, threshold)
 
 
 def dedup_clusters(
-    documents: DataFrame,
-    num_hashes: int = 32,
-    bands: int = 8,
-    n: int = 3,
-    threshold: float = 0.05,
-    max_df: int = 64,
-    max_iters: int = 20,
-    index: DataFrame | None = None,
+    index: DedupIndex, num_hashes: int = 32, bands: int = 8, threshold: float = 0.05, max_iters: int = 20
 ) -> DataFrame:
     """Near-duplicate CLUSTERS: connected components over the verified
     MinHash-LSH pair graph, labelling every clustered doc with the min
     doc_id of its component (the canonical representative a training
     pipeline keeps). Emits (doc_id, cluster_id, cluster_size) for docs
-    that belong to a component of >= 2.
-
-    Distributed algorithm: iterative min-label propagation — each round,
-    every node takes the min of its own label and its neighbors' labels.
-    Rounds needed = component diameter; near-dup components are copies of
-    the same content, so diameters are tiny (mostly cliques through the
-    canonical text, diameter <= 2-3). Each round is ONE shuffle join of
-    the (node, label) table with the symmetrized edge list + one agg; the
-    loop localCheckpoints every round to cut the lineage (same pattern as
-    the MRO ancestor closure, codeunits.py) and exits on a converged
-    aggregate (sum of labels stable — monotone non-increasing, so equality
-    ⇔ fixpoint; no per-round collect of data rows). At web scale the
-    well-known refinement is alternating large-star/small-star (Kiveris et
-    al. 2014), which bounds rounds to O(log^2 n) on adversarial graphs —
-    the per-round plan here is the same join+agg shape, so the swap is
-    local; for dedup graphs plain propagation converges in fewer rounds.
+    that belong to a component of >= 2. Near-dup components are copies of
+    the same content, so their diameters are tiny (mostly cliques through
+    the canonical text, diameter <= 2-3) and min-label propagation
+    converges in a few rounds; see connected_components for the solve.
     """
     pairs = minhash_lsh_pairs(
-        documents, num_hashes=num_hashes, bands=bands, n=n,
-        threshold=threshold, max_df=max_df, index=index,
+        index, num_hashes=num_hashes, bands=bands, threshold=threshold
     ).select("doc_a", "doc_b")
     return connected_components(pairs, max_iters=max_iters)
 
 
 def connected_components(
-    pairs: DataFrame,
-    max_iters: int = 20,
-    local_threshold: int = 100_000,
-    algorithm: str = "auto",
+    pairs: DataFrame, max_iters: int = 20, local_threshold: int = 100_000
 ) -> DataFrame:
     """Connected components over an undirected (doc_a, doc_b) pair list →
-    (doc_id, cluster_id, cluster_size), cluster_id = component min. See
-    dedup_clusters for the scale analysis; exposed separately so the
-    iteration is testable on crafted chain graphs (diameter > 1).
+    (doc_id, cluster_id, cluster_size), cluster_id = component min; exposed
+    separately so the iteration is testable on crafted chain graphs.
 
     Adaptive solve (the AQE-broadcast pattern, decided on the RUNTIME edge
     count, never assumed): the pair list is materialized once
     (localCheckpoint — also cuts the lineage to the expensive dedup plan),
     and when it is at most ``local_threshold`` edges the components are
     solved driver-side with union-find — identical output, none of the
-    per-round join/checkpoint/probe jobs. Above the threshold one of two
-    distributed loops runs; a near-dup pair graph at corpus scale can be
-    arbitrarily large, so the distributed path is the default shape, not a
-    fallback.
+    per-round join/checkpoint/probe jobs. Above the threshold the
+    distributed loop runs; a near-dup pair graph at corpus scale can be
+    arbitrarily large, so that is the default shape, not a fallback.
 
-    ``algorithm``:
-
-    - ``"auto"`` (default) — min-label propagation that ESCALATES to the
-      star algorithm when it has not converged after ``escalate_after``
-      rounds. Non-convergence after K rounds is itself the high-diameter
-      probe (a component of diameter <= K is already solved by then), so no
-      separate — and necessarily heuristic — structure sniff is needed: the
-      common dedup graph (near-cliques, diameter 2-3) pays zero extra
-      rounds, an adversarial chain graph pays K propagation rounds and then
-      contracts in O(log^2 n) star rounds on the label-quotient graph.
-    - ``"propagation"`` — per-round min-label exchange with neighbors;
-      rounds = component DIAMETER. Right for dedup graphs, whose
-      components are near-cliques through the canonical text.
-    - ``"star"`` — alternating large-star/small-star edge rewriting
-      (Kiveris et al. 2014, "Connected Components in MapReduce and
-      Beyond"): each round re-points high nodes at their neighborhood
-      minimum, collapsing any component to a star in O(log^2 n) rounds
-      regardless of diameter. Same per-round join+agg plan shape.
-
-    All return byte-identical output (test-pinned on path and clique
-    graphs, where their round counts differ most).
+    The distributed loop (_cc_auto) is min-label propagation (rounds =
+    component DIAMETER) that escalates to large-star/small-star (_cc_star,
+    Kiveris et al. 2014: O(log^2 n) rounds on any graph, same per-round
+    join+agg shape) when it has not converged after K rounds.
+    Non-convergence is itself the high-diameter probe — a component of
+    diameter <= K is solved by then — so the common dedup graph pays zero
+    extra rounds and no heuristic structure sniff is needed. Every path
+    labels identically (test-pinned against union-find).
     """
     pairs = pairs.localCheckpoint()
     n_edges = pairs.count()
@@ -399,14 +366,7 @@ def connected_components(
         return _cc_unionfind_local(pairs)
     a, b = pairs.columns[0], pairs.columns[1]
     undirected = pairs.select(F.col(a).alias("doc_a"), F.col(b).alias("doc_b"))
-    if algorithm == "star":
-        labels, _ = _cc_star(undirected, max_iters)
-    elif algorithm == "propagation":
-        labels, _, _ = _cc_propagation(undirected, max_iters)
-    elif algorithm == "auto":
-        labels, _ = _cc_auto(undirected, max_iters)
-    else:
-        raise ValueError(f"unknown connected_components algorithm: {algorithm!r}")
+    labels, _ = _cc_auto(undirected, max_iters)
     sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
         labels.join(sizes, "label")
@@ -737,12 +697,10 @@ def simhash32(documents: DataFrame) -> DataFrame:
     return agg.select("doc_id", fp.alias("simhash")).orderBy("doc_id")
 
 
-def duplicated_span_stats(
-    documents: DataFrame, n: int = 5, index: DataFrame | None = None
-) -> DataFrame:
+def duplicated_span_stats(index: DedupIndex) -> DataFrame:
     """Per-document cross-corpus duplicated-span fraction: for each doc,
-    the share of its distinct word ``n``-grams that also occur in at least
-    one OTHER document — the per-document signal behind exact-substring
+    the share of its distinct word ``index.n``-grams that also occur in at
+    least one OTHER document — the per-document signal behind exact-substring
     training-data dedup (Lee et al. 2022, "Deduplicating Training Data
     Makes Language Models Better"), at word-n-gram granularity. Docs with
     a high ``dup_fraction`` are boilerplate/mirror candidates even when no
@@ -768,12 +726,12 @@ def duplicated_span_stats(
     int/int rounded once (round-half-up identical on both engines for
     positive exact doubles at 6 dp).
 
-    ``index``: optional pre-built ``word_shingle_keys(documents, n)`` table
-    shared across dedup consumers (see ngram_jaccard_pairs) — note the
-    shared-pipeline caller then fixes ONE n for all consumers (this
-    operator's standalone default is 5-gram spans).
+    The keys are not pinned through the owner: q60 alone reads its 5-gram
+    index, and the cache build cost more than the second scan it saves
+    (+0.45 s median, 10 interleaved pairs, sf0.1, 4 cores). Under an owner
+    that already pinned these keys, Spark substitutes the cached table.
     """
-    idx = index if index is not None else word_shingle_keys(documents, n)
+    idx = word_shingle_keys(index.documents, index.n)
     df = idx.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
     per = (
         idx.join(df, "shingle")
@@ -785,7 +743,7 @@ def duplicated_span_stats(
     )
     # left join back so short docs (< n words, no shingles) keep a 0/0 row
     return (
-        documents.select("doc_id")
+        index.documents.select("doc_id")
         .join(per, "doc_id", "left")
         .select(
             "doc_id",
@@ -804,9 +762,7 @@ def duplicated_span_stats(
     )
 
 
-def source_ngram_overlap(
-    documents: DataFrame, n: int = 3, index: DataFrame | None = None
-) -> DataFrame:
+def source_ngram_overlap(index: DedupIndex) -> DataFrame:
     """Cross-source n-gram overlap matrix: for every source pair (a < b),
     the number of distinct word n-gram shingle keys both sources contain,
     each side's distinct-shingle count, and the containment per-mille
@@ -814,10 +770,9 @@ def source_ngram_overlap(
     that tells you which web sources are re-crawls / mirrors of each other
     before you weight them in a training mixture.
 
-    Plan: tag the md5i shingle-key index (``word_shingle_keys`` — reusable
-    via ``index=``) with its source through a doc_id-keyed join, take the
-    distinct (source, shingle) pairs, and self-join on the 8-byte shingle
-    key with ``a.source <= b.source`` — both sides are distinct, so the
+    Plan: tag the owner's md5i shingle-key index (``index.keys``) with its
+    source through a doc_id-keyed join, take the distinct (source, shingle)
+    pairs, and self-join on the 8-byte shingle key with ``a.source <= b.source`` — both sides are distinct, so the
     per-shingle join fanout is bounded by |sources|^2 regardless of how
     many DOCUMENTS share a viral shingle (the same bound that makes the
     q12/q13 index safe). The diagonal rows of the same aggregate ARE the
@@ -826,9 +781,8 @@ def source_ngram_overlap(
     localCheckpoint and joined back to its own diagonal as a LocalRelation.
     No broadcast hints anywhere: source cardinality is corpus-dependent
     (AQE broadcasts the genuinely tiny sides at runtime)."""
-    keys = index if index is not None else word_shingle_keys(documents, n)
     tagged = (
-        keys.join(documents.select("doc_id", "source"), "doc_id")
+        index.keys.join(index.documents.select("doc_id", "source"), "doc_id")
         .select("source", "shingle")
         .distinct()
     )

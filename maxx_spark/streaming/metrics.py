@@ -57,6 +57,8 @@ class ThroughputListener(StreamingQueryListener):
         stopped (a listener event can still be in flight after
         ``awaitTermination()`` returns). Batches older than its retention
         window (100 entries by default) come from the events received."""
+        # events arrive asynchronously: drain the bus so no old batch is in flight
+        query._jsq.sparkSession().sparkContext().listenerBus().waitUntilEmpty()
         with self._lock:
             bs = list(self.batches)
         recent = [_ledger_row(p) for p in query.recentProgress]

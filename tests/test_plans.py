@@ -107,13 +107,17 @@ def test_no_unbounded_broadcast_hints(spark, sf_dir):
     from maxx_spark.plans import broadcast_hint_count, executed_plan
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    for df in (
-        T.corpus_filter(docs),
-        D.ngram_jaccard_pairs(docs),
-        D.minhash_lsh_pairs(docs),
-        D.exact_dedup(docs),
-    ):
-        assert broadcast_hint_count(df) == 0
+    idx = D.DedupIndex(docs)
+    try:
+        for df in (
+            T.corpus_filter(docs),
+            D.ngram_jaccard_pairs(idx),
+            D.minhash_lsh_pairs(idx),
+            D.exact_dedup(docs),
+        ):
+            assert broadcast_hint_count(df) == 0
+    finally:
+        idx.release()
     # corpus_filter's canonical pick: a slim map-side-combined rollup plus
     # a doc_id SEMI-join (round 4 — the round-3 window on the text hash
     # put every copy of a viral duplicate in one window partition, which
@@ -174,17 +178,20 @@ def test_no_unbounded_broadcast_hints_all_queries(spark, sf_dir):
 
     bad = {}
     slow_python = {}
-    for name, fn in entry.queries().items():
-        df = fn(spark, sf_dir)
-        n = broadcast_hint_count(df)
-        if n != allowed.get(name, 0):
-            bad[name] = (n, allowed.get(name, 0))
-        # second registry-wide gate: no row-at-a-time Python UDF anywhere —
-        # BatchEvalPython is the interpreted per-row stage; Arrow-batched
-        # stages (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas)
-        # remain allowed
-        if "BatchEvalPython" in executed_plan(df):
-            slow_python[name] = True
+    try:
+        for name, fn in entry.queries().items():
+            df = fn(spark, sf_dir)
+            n = broadcast_hint_count(df)
+            if n != allowed.get(name, 0):
+                bad[name] = (n, allowed.get(name, 0))
+            # second registry-wide gate: no row-at-a-time Python UDF anywhere —
+            # BatchEvalPython is the interpreted per-row stage; Arrow-batched
+            # stages (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas)
+            # remain allowed
+            if "BatchEvalPython" in executed_plan(df):
+                slow_python[name] = True
+    finally:
+        entry.release()  # this module copy's registry pins its own tables
     assert not bad, f"unexpected broadcast-hint counts (got, expected): {bad}"
     assert not slow_python, f"row-at-a-time Python UDF in: {sorted(slow_python)}"
 
@@ -310,9 +317,13 @@ def test_round5_new_op_plan_shapes(spark, sf_dir):
     from maxx_spark.plans import broadcast_hint_count, executed_plan, plan_summary
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    span = D.duplicated_span_stats(docs)
-    assert broadcast_hint_count(span) == 0
-    assert "Window" not in executed_plan(span)
+    idx = D.DedupIndex(docs, n=5)
+    try:
+        span = D.duplicated_span_stats(idx)
+        assert broadcast_hint_count(span) == 0
+        assert "Window" not in executed_plan(span)
+    finally:
+        idx.release()
     s = plan_summary(T.quality_classifier(docs))
     assert s["shuffles"] == 0 and s["python_stages"] == 0
 

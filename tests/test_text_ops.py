@@ -50,19 +50,21 @@ def test_connected_components_reversed_chain(spark):
 
 
 def test_connected_components_star_variant(spark):
-    """algorithm='star' (large-star/small-star) must (a) agree byte-for-byte
-    with union-find and with propagation on ordinary graphs, and (b) solve a
-    long PATH — propagation's worst case, where rounds = diameter — within a
-    round budget propagation provably blows."""
+    """The two distributed loops, called directly: star (large-star/
+    small-star) and propagation must (a) label ordinary graphs exactly as
+    union-find does — and so must connected_components' distributed path —
+    and (b) star must solve a long PATH, propagation's worst case where
+    rounds = diameter, within a round budget propagation provably blows."""
     import random
 
     from maxx_spark.operators.dedup import (
         _cc_propagation,
         _cc_star,
+        _cc_unionfind_local,
         connected_components,
     )
 
-    # ordinary graphs: random edges + a 3-node chain — star == others
+    # ordinary graphs: random edges + a 3-node chain
     rng = random.Random(3)
     nodes = list(range(0, 400, 7))
     random_pairs = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(60)]
@@ -70,12 +72,15 @@ def test_connected_components_star_variant(spark):
         [(a, b) for a, b in random_pairs if a != b] + [(900, 901), (901, 902)],
         "doc_a long, doc_b long",
     )
-    want = {r["doc_id"]: (r["cluster_id"], r["cluster_size"])
-            for r in connected_components(pairs).collect()}  # union-find path
-    for algo in ("propagation", "star", "auto"):
-        got = {r["doc_id"]: (r["cluster_id"], r["cluster_size"])
-               for r in connected_components(pairs, local_threshold=0, algorithm=algo).collect()}
-        assert got == want, algo
+    uf = _cc_unionfind_local(pairs).collect()
+    want = {r["doc_id"]: r["cluster_id"] for r in uf}
+    prop_labels, _, prop_conv = _cc_propagation(pairs, max_iters=20)
+    assert prop_conv
+    star_labels, _ = _cc_star(pairs, max_iters=20)
+    for name, labels in (("propagation", prop_labels), ("star", star_labels)):
+        assert {r["doc_id"]: r["label"] for r in labels.collect()} == want, name
+    got = connected_components(pairs, local_threshold=0).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, uf))
 
     # 120-node path, min at the far end: diameter 119. In 8 rounds
     # propagation moves the min label only ~8 hops (not converged); star
@@ -243,7 +248,7 @@ def test_duplicated_span_stats_exact(spark):
     """q60: cross-doc duplicated 5-gram fraction — one shared span counts
     for both docs, within-doc repetition does NOT count, short docs get an
     explicit 0/0 row."""
-    from maxx_spark.operators.dedup import duplicated_span_stats
+    from maxx_spark.operators.dedup import DedupIndex, duplicated_span_stats
 
     rows = [
         "one two three four five six",        # grams: {1-5, 2-6}; shares 1-5 with d1
@@ -252,7 +257,11 @@ def test_duplicated_span_stats_exact(spark):
         "too short",                          # < 5 words -> no grams
         "x y z w v x y z w v",                # 5 distinct grams, all internal repeats
     ]
-    out = {r["doc_id"]: r for r in duplicated_span_stats(_docs(spark, rows)).collect()}
+    idx = DedupIndex(_docs(spark, rows), n=5)
+    try:
+        out = {r["doc_id"]: r for r in duplicated_span_stats(idx).collect()}
+    finally:
+        idx.release()
     assert (out[0]["total_ngrams"], out[0]["dup_ngrams"], out[0]["dup_fraction"]) == (2, 1, 0.5)
     assert (out[1]["total_ngrams"], out[1]["dup_ngrams"], out[1]["dup_fraction"]) == (2, 1, 0.5)
     assert (out[2]["total_ngrams"], out[2]["dup_ngrams"], out[2]["dup_fraction"]) == (1, 0, 0.0)
@@ -260,32 +269,99 @@ def test_duplicated_span_stats_exact(spark):
     assert (out[4]["total_ngrams"], out[4]["dup_ngrams"], out[4]["dup_fraction"]) == (5, 0, 0.0)
 
 
-def test_shared_shingle_index_identical(spark, sf_dir):
-    """VERDICT r5 item 7: q12/q13/q44/q60 accept a pre-built shingle-key
-    index (build ONCE at pipeline scale); passing it must be byte-identical
-    to each operator's inline build at the same n."""
-    from maxx_spark.operators.dedup import (
-        dedup_clusters,
-        duplicated_span_stats,
-        minhash_lsh_pairs,
-        ngram_jaccard_pairs,
-        word_shingle_keys,
-    )
-    from maxx_spark.session import load_tables
+_DEDUP_CHAIN = (
+    "q12_ngram_jaccard",
+    "q13_minhash_lsh",
+    "q44_dedup_clusters",
+    "q60_dup_span_fraction",
+    "q63_source_overlap",
+)
 
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    idx = word_shingle_keys(docs, 3).persist()
+
+def _pinned_rdds(spark):
+    """Persisted RDDs that are not local checkpoints. connected_components
+    (q44) and source_ngram_overlap (q63) localCheckpoint small intermediates
+    (the pair list, the source-pair counts): those RDDs belong to the
+    returned DataFrame's lineage, not to any owner, and the JVM's
+    ContextCleaner frees them once that DataFrame is garbage — so they are
+    excluded here, and the count measures exactly what owners pin."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
+    return sum(1 for r in rdds if not r.rdd().isLocallyCheckpointed())
+
+
+def test_dedup_index_releases_only_what_it_cached(spark):
+    """Spark matches cached plans canonically, so a second owner over the
+    same corpus reads the first one's cached index; its release() must
+    leave that cache to the first owner, whose release() frees it."""
+    from pyspark.storagelevel import StorageLevel
+
+    from maxx_spark.operators.dedup import DedupIndex, word_shingle_keys
+
+    docs = _docs(spark, ["one two three four", "one two three five"])
+    plan = word_shingle_keys(docs, 3)  # the keys' plan, never cached itself
+    first, second = DedupIndex(docs), DedupIndex(docs)
     try:
-        idx.count()  # materialize once, as a pipeline would
-        for fn in (ngram_jaccard_pairs, minhash_lsh_pairs, duplicated_span_stats):
-            base = fn(docs, n=3)
-            shared = fn(docs, n=3, index=idx)
-            assert sorted(map(tuple, base.collect())) == sorted(map(tuple, shared.collect())), fn.__name__
-        base = dedup_clusters(docs, n=3)
-        shared = dedup_clusters(docs, n=3, index=idx)
-        assert sorted(map(tuple, base.collect())) == sorted(map(tuple, shared.collect()))
+        assert first.keys.count() == second.keys.count() == 4
+        second.release()
+        assert plan.storageLevel != StorageLevel.NONE
     finally:
-        idx.unpersist()
+        first.release()
+    assert plan.storageLevel == StorageLevel.NONE
+
+
+def test_dedup_registry_release_restores_persisted_rdds(spark, sf_dir):
+    """q12 -> q13 -> q44 through the session registry pin their shared
+    artifacts (and q23 the golden units); release() unpersists all of
+    them, back to the persisted-RDD count before the chain."""
+    import __spark_entry__ as e
+
+    e.release()
+    start = _pinned_rdds(spark)
+    qs = e.queries()
+    for q in _DEDUP_CHAIN[:3] + ("q23_extract_units",):
+        qs[q](spark, sf_dir).collect()
+    assert _pinned_rdds(spark) > start
+    e.release()
+    assert _pinned_rdds(spark) == start
+
+
+def test_dedup_registry_corpus_switch_does_not_grow(spark, sf_dir):
+    """A dedup chain over sf0.001 and then sf0.01 in one session: asking
+    for the second corpus releases the first one's owners, so the
+    persisted-RDD count does not grow."""
+    import __spark_entry__ as e
+
+    e.release()
+    start = _pinned_rdds(spark)
+    qs = e.queries()
+    after = []
+    try:
+        for sf in (sf_dir, sf_dir.replace("sf0.001", "sf0.01")):
+            for q in _DEDUP_CHAIN:
+                qs[q](spark, sf).collect()
+            after.append(_pinned_rdds(spark))
+    finally:
+        e.release()
+    assert after[0] > start
+    assert after[1] <= after[0], after
+
+
+def test_dedup_registry_order_independent(spark, sf_dir):
+    """Reuse is explicit, not an accident of query order: the dedup chain
+    run forward (q13 and q44 read the index q12 built, q44 the pairs q13
+    built) and in reverse (q44 builds everything first, q13 and q12 read
+    it) returns identical rows for every query — q44 before q13 equals
+    q44 after q13."""
+    import __spark_entry__ as e
+
+    qs = e.queries()
+    runs = []
+    for order in (_DEDUP_CHAIN, _DEDUP_CHAIN[::-1]):
+        e.release()
+        runs.append({q: sorted(map(tuple, qs[q](spark, sf_dir).collect())) for q in order})
+    e.release()
+    assert runs[0] == runs[1]
+    assert runs[0]["q44_dedup_clusters"] and runs[0]["q13_minhash_lsh"]
 
 
 def test_quality_classifier_exact(spark):
@@ -332,8 +408,8 @@ def test_token_histogram_exact(spark):
 def test_source_overlap_exact(spark):
     """q63: distinct-shingle containment between sources; a shingle shared
     by MANY docs of the same pair still counts once (distinct before the
-    self-join), and a prebuilt index= gives byte-identical output."""
-    from maxx_spark.operators.dedup import source_ngram_overlap, word_shingle_keys
+    self-join)."""
+    from maxx_spark.operators.dedup import DedupIndex, source_ngram_overlap
 
     rows = [
         "one two three four",    # src0: {one-two-three, two-three-four}
@@ -341,8 +417,11 @@ def test_source_overlap_exact(spark):
         "alpha beta gamma",      # src0: {alpha-beta-gamma}
         "one two three four",    # src1: duplicate of d0's grams (multiplicity probe)
     ]
-    docs = _docs(spark, rows)
-    out = source_ngram_overlap(docs).collect()
+    idx = DedupIndex(_docs(spark, rows))
+    try:
+        out = source_ngram_overlap(idx).collect()
+    finally:
+        idx.release()
     assert len(out) == 1
     r = out[0]
     # src0 = {otf's 2, abg} = 3; src1 = {otf's 2 from d3, ott, tt5} = 3... see sets:
@@ -350,8 +429,6 @@ def test_source_overlap_exact(spark):
     assert (r["source_a"], r["source_b"]) == ("src0", "src1")
     assert (r["n_a"], r["n_b"], r["n_shared"]) == (3, 3, 2)
     assert r["containment_pm"] == 666  # floor(1000*2/3)
-    pre = source_ngram_overlap(docs, index=word_shingle_keys(docs, 3)).collect()
-    assert [tuple(x) for x in pre] == [tuple(x) for x in out]
 
 
 def test_length_percentiles_exact(spark):
@@ -390,7 +467,7 @@ def test_dedup_capped_pairs_exact(spark):
     max_df=2 drops t1..t6: d0 = d3 = {t7}, d1 = {t8}, so only
       (0,3): inter 1, union 1 survives.
     """
-    from maxx_spark.operators.dedup import ngram_jaccard_pairs
+    from maxx_spark.operators.dedup import DedupIndex, ngram_jaccard_pairs
 
     rows = [
         "the quick brown fox jumps over the lazy dog",
@@ -400,26 +477,12 @@ def test_dedup_capped_pairs_exact(spark):
         " ".join(["viral gram here"] * 30),  # repeated shingle inside one doc
     ]
     docs = _docs(spark, rows)
-    got = [tuple(r) for r in ngram_jaccard_pairs(docs, max_df=3).collect()]
-    assert got == [(0, 1, 6, 8), (0, 3, 7, 7), (1, 3, 6, 8)]
-    got = [tuple(r) for r in ngram_jaccard_pairs(docs, max_df=2).collect()]
-    assert got == [(0, 3, 1, 1)]
-
-
-def test_minhash_string_index_equivalent(spark, sf_dir):
-    """r7: minhash_lsh_pairs builds its hash arithmetic as SQL strings with
-    two x-derivations (pre-hashed bigint keys vs md5i over a raw STRING
-    shingle index). Both index forms must produce identical pairs — pins
-    the rarely-exercised string branch against the rewrite."""
-    from maxx_spark.operators.dedup import minhash_lsh_pairs, word_shingles
-    from maxx_spark.session import load_tables
-
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    idx_str = word_shingles(docs, 3)
-    assert dict(idx_str.dtypes)["shingle"] == "string"
-    base = minhash_lsh_pairs(docs, n=3)
-    via_str = minhash_lsh_pairs(docs, n=3, index=idx_str)
-    assert sorted(map(tuple, base.collect())) == sorted(map(tuple, via_str.collect()))
+    for max_df, want in ((3, [(0, 1, 6, 8), (0, 3, 7, 7), (1, 3, 6, 8)]), (2, [(0, 3, 1, 1)])):
+        idx = DedupIndex(docs, max_df=max_df)
+        try:
+            assert [tuple(r) for r in ngram_jaccard_pairs(idx).collect()] == want, max_df
+        finally:
+            idx.release()
 
 
 def test_drop_late_events_matches_sequential_reference(spark):
