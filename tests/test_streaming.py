@@ -70,6 +70,9 @@ def test_exactly_once_extraction(spark, staged, tmp_path):
     # lineage recorded per (batch, partition)
     lineage = sink.read_lineage(spark)
     assert lineage is not None
+    # nothing committed yet: an empty frame with the lineage schema
+    empty = ExactlyOnceParquetSink(str(tmp_path / "nolineage")).read_lineage(spark)
+    assert empty.collect() == [] and empty.columns == lineage.columns
     lrows = lineage.collect()
     assert sum(r["rows"] for r in lrows) == n1
     # non-empty partitions carry event-time bounds (from parquet footers)
@@ -323,6 +326,169 @@ def test_dead_letter_routing(spark, tmp_path):
     assert edf.count() == 1 and "BadZipFile" in edf.first()["error"]
     # data dir still holds everything (single source of truth)
     assert sink.read_committed(spark).count() == 2
+
+
+_DLQ_CLASS = """classdef (Sealed) Widget < handle
+    properties (Access = private)
+        x
+    end
+    methods
+        function obj = Widget(a, b)
+            % Widget  build one.
+            %
+            % Examples:
+            %   w = Widget(1, 'x');
+            arguments
+                a double = 1
+                b (1,:) char = 'x'
+            end
+            obj.x = a;
+        end
+    end
+end"""
+
+
+def _dlq_units(spark, n_bad=4, n_good=4):
+    """Extracted units of good and malformed pages; the class, function and
+    live-script units of the good pages are also marked as errors, so error
+    rows carry non-null nested columns (attributes, arguments, sections)."""
+    from maxx_spark.extract import extract_code_units
+
+    t0 = dt.datetime(2024, 6, 3)
+    rows = [(f"https://dl/x/+p{i}/Widget.m", t0 + dt.timedelta(minutes=i), None, _DLQ_CLASS, "matlab")
+            for i in range(n_good)]
+    rows += [(f"https://dl/x/+p{i}/demo.m", t0, None, "%% Setup\nx = 1;\n%% Plot\nplot(x);", "matlab")
+             for i in range(n_good)]
+    rows += [(f"https://dl/x/bad{i}.mlx", t0, b"PK\x03\x04 broken zip bytes!", None, "matlab")
+             for i in range(n_bad)]
+    units = extract_code_units(spark.createDataFrame(rows, PAGES))
+    return units.withColumn(
+        "error",
+        F.when(F.col("kind").isin("class", "function", "live_script"), F.lit("flagged upstream"))
+        .otherwise(F.col("error")),
+    )
+
+
+def _json_rows(df):
+    return sorted(r[0] for r in df.select(F.to_json(F.struct(*df.columns))).collect())
+
+
+def _dlq_files(base, batch_id):
+    return sorted(os.listdir(f"{base}/errors/batch_id={batch_id}"))
+
+
+def test_dead_letter_copy_parity(spark, tmp_path):
+    """The driver-side copy writes exactly the committed error rows, with
+    every column (``__pid``, timestamp type, nested columns) as Spark
+    wrote them, from a batch whose errors sit in two data files."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = str(tmp_path / "dlqp")
+    sink = ExactlyOnceParquetSink(base)
+    sink(_dlq_units(spark).repartition(2), 0)
+
+    data = spark.read.parquet(f"{base}/data/batch_id=0")
+    want = data.where(F.col("error").isNotNull())
+    per_file = want.groupBy("__pid").count().collect()
+    assert len(per_file) >= 2, "errors must span at least two data files"
+    for col in ("attributes", "arguments", "sections"):
+        assert want.where(F.col(col).isNotNull()).count() > 0, col
+
+    assert _dlq_files(base, 0) == ["part-00000.parquet"]
+    got = spark.read.parquet(f"{base}/errors/batch_id=0")
+    assert got.schema == data.schema  # incl. __pid and TimestampType warc_ts
+    assert _json_rows(got) == _json_rows(want)
+    committed = sink.read_committed(spark).where(F.col("error").isNotNull())
+    assert _json_rows(got.drop("__pid")) == _json_rows(committed)
+    # the file keeps Spark's row metadata and TIMESTAMP_MICROS event time
+    arrow = pq.read_schema(f"{base}/errors/batch_id=0/part-00000.parquet")
+    assert arrow.field("warc_ts").type == pa.timestamp("us", tz="UTC")
+    assert b"org.apache.spark.sql.parquet.row.metadata" in arrow.metadata
+    with open(f"{base}/_commits/0.json") as f:
+        assert json.load(f)["dlq_rows"] == want.count()
+
+    # a batch without errors writes no errors/ directory
+    clean = _dlq_units(spark, n_bad=0).where(F.col("error").isNull())
+    sink(clean, 1)
+    assert not os.path.exists(f"{base}/errors/batch_id=1")
+    with open(f"{base}/_commits/1.json") as f:
+        assert json.load(f)["dlq_rows"] == 0
+
+
+def test_dead_letter_copy_without_statistics(tmp_path):
+    """Row groups without footer statistics are flagged whole and scanned,
+    so every error row is routed and no exact count is claimed."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from maxx_spark.streaming.sink import copy_error_rows
+
+    data_dir = tmp_path / "data"
+    data_dir.mkdir()
+    errors = [f"e{i}" if i % 7 == 3 else None for i in range(40)]
+    table = pa.table({
+        "warc_ts": pa.array([dt.datetime(2024, 1, 1, 0, i) for i in range(40)], pa.timestamp("us")),
+        "row": pa.array(range(40), pa.int64()),
+        "error": pa.array(errors, pa.string()),
+    })
+    pq.write_table(table, str(data_dir / "part-00000-x.parquet"),
+                   row_group_size=8, write_statistics=False)
+
+    sink = ExactlyOnceParquetSink(str(tmp_path / "sink"))
+    lineage, flagged, expected = sink._footer_lineage(str(data_dir), 0)
+    assert lineage[0]["rows"] == 40 and expected is None
+    assert flagged == [(str(data_dir / "part-00000-x.parquet"), [0, 1, 2, 3, 4])]
+    out = str(tmp_path / "dlq")
+    assert copy_error_rows(flagged, out) == sum(e is not None for e in errors)
+    got = pq.read_table(f"{out}/part-00000.parquet")
+    assert got.column("row").to_pylist() == [i for i, e in enumerate(errors) if e is not None]
+    assert got.column("error").to_pylist() == [e for e in errors if e is not None]
+
+
+def test_dead_letter_count_mismatch_blocks_commit(spark, tmp_path, monkeypatch):
+    """A copy that disagrees with the footers' exact error count fails the
+    batch before its marker; the replay then commits the full copy."""
+    import json
+
+    from maxx_spark.streaming import sink as sink_mod
+
+    base = str(tmp_path / "dlqm")
+    sink = ExactlyOnceParquetSink(base)
+    units = _dlq_units(spark)
+    real = sink_mod._error_rows
+    monkeypatch.setattr(sink_mod, "_error_rows", lambda t: real(t).slice(1))
+    with pytest.raises(RuntimeError, match="dead-letter rows"):
+        sink(units, 0)
+    assert not sink.is_committed(0)
+    assert not os.path.exists(f"{base}/errors/batch_id=0")
+
+    monkeypatch.setattr(sink_mod, "_error_rows", real)
+    sink(units, 0)
+    with open(f"{base}/_commits/0.json") as f:
+        n = json.load(f)["dlq_rows"]
+    assert n == sink.read_committed(spark).where(F.col("error").isNotNull()).count() > 0
+
+
+def test_dead_letter_replay_clears_stale_files(spark, tmp_path):
+    """A crash between the DLQ write and the marker leaves files behind; the
+    replay of that batch leaves exactly one DLQ file holding exactly the
+    committed error rows."""
+    base = str(tmp_path / "dlqr")
+    sink = ExactlyOnceParquetSink(base)
+    units = _dlq_units(spark)
+    stale_dir = f"{base}/errors/batch_id=3"
+    os.makedirs(stale_dir)
+    units.limit(2).toPandas().to_parquet(f"{stale_dir}/part-00007-stale.parquet")
+    assert not sink.is_committed(3)
+
+    sink(units, 3)
+    assert _dlq_files(base, 3) == ["part-00000.parquet"]
+    got = spark.read.parquet(stale_dir).drop("__pid")
+    want = sink.read_committed(spark).where(F.col("error").isNotNull())
+    assert _json_rows(got) == _json_rows(want)
 
 
 def test_dedup_units_stream(spark, tmp_path):
