@@ -3,7 +3,8 @@
 NOT part of the frozen driver contract (bench.py is frozen); this harness
 exists to (a) time individual queries with the exact bench methodology,
 (b) dump .explain("formatted") plans to plans/<tag>/<query>_<suffix>.txt,
-and (c) count Spark jobs per query — so plan-shape claims in
+and (c) count the Spark jobs of each rep (``jobs`` in the query's JSON line,
+next to ``times``) — so plan-shape claims in
 OPTIMIZATION_r*.md are backed by committed artifacts.
 
 Usage:
@@ -66,16 +67,21 @@ def main() -> None:
     tracker = sc.statusTracker()
     out: dict[str, dict] = {}
     for name in names:
-        sc.setJobDescription(f"profile:{name}")
-        times = []
-        jobs0 = len(tracker.getJobIdsForGroup(None) or [])
+        times, jobs = [], []
         for rep in range(reps):
+            # one job group per rep: SQL execution threads (broadcasts,
+            # subqueries) inherit it, so the group holds every job of the rep
+            group = f"profile:{name}:{rep}"
+            sc.setJobGroup(group, f"profile:{name}")
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
             df.select(
                 F.bit_xor(F.xxhash64(*[F.col(c).cast("string") for c in df.columns])).alias("h")
             ).collect()
             times.append(round(time.perf_counter() - t0, 3))
+            # the status store is fed by the listener bus: drain it first
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.append(len(tracker.getJobIdsForGroup(group)))
         if plans_dir:
             os.makedirs(plans_dir, exist_ok=True)
             df = qs[name](spark, sf_dir)
@@ -84,7 +90,7 @@ def main() -> None:
             )
             with open(os.path.join(plans_dir, f"{name}_{suffix}.txt"), "w") as f:
                 f.write(plan)
-        out[name] = {"times": times, "min": min(times)}
+        out[name] = {"times": times, "min": min(times), "jobs": jobs}
         print(json.dumps({name: out[name]}), flush=True)
     total_min = round(sum(v["min"] for v in out.values()), 3)
     print(json.dumps({"metric": "isolated_min_total", "value": total_min, "n": len(out)}))

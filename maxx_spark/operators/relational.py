@@ -74,55 +74,32 @@ def revenue_by_nation(customer: DataFrame, orders: DataFrame, lineitem: DataFram
 
 
 def top_parts_by_brand(lineitem: DataFrame, part: DataFrame, k: int = 3) -> DataFrame:
-    """Top-k parts per brand by shipped quantity — bounded-buffer aggregation,
-    no per-brand rank window.
+    """Top-k parts per brand by shipped quantity: one ``row_number`` rank
+    filter over a two-phase bounded top-k.
 
-    Aggregate first (shrinks the fact table to |parts| rows), then take the
-    top k with k ``max_by`` passes. Each pass is a map-side-combinable
-    aggregate whose buffer holds ONE row per brand, so its shuffle moves only
-    |brands| x map-partials rows; the winners-so-far set (<= i x |brands|
-    rows) anti-joins back with no hint — AQE broadcasts it at runtime. Unlike
-    ``Window.partitionBy(p_brand)`` rank, no single task ever sorts a whole
-    brand's aggregated parts (~|parts|/|brands| rows, which scales with SF).
-    Catalyst reuses the aggregation exchange across the k passes. part scales
-    with SF (~200k x SF rows) so it carries no broadcast hint either.
+    Aggregate first (shrinks the fact table to |parts| rows), then rank on
+    the strict total order ``total_qty desc, p_partkey asc`` and keep
+    ``rnk <= k``. Catalyst plans the literal rank filter as
+    ``WindowGroupLimit Partial`` (each map task keeps k candidates per
+    brand) -> ``Exchange hashpartitioning(p_brand)`` -> ``WindowGroupLimit
+    Final`` -> ``Window``, so the per-brand sort sees at most k x
+    map-partitions rows whatever the SF. So a rank window no longer means
+    one task sorting a whole brand's parts (~|parts|/|brands| rows, growing
+    with SF): that held only for a rank window without this limit, and
+    ``plans.window_bounds`` gates the shape in tests/test_plans.py. ``k``
+    must stay a literal (a non-literal rank filter is not pushed into the
+    limit). part scales with SF (~200k x SF rows), so it carries no
+    broadcast hint.
     """
-    agg = (
+    w = Window.partitionBy("p_brand").orderBy(F.desc("total_qty"), F.asc("p_partkey"))
+    return (
         lineitem.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_brand", "p_partkey", "p_name")
         .agg(F.round(F.sum(F.col("l_quantity").cast(DEC)), 2).cast("double").alias("total_qty"))
-        # pin the aggregated set so the k passes + anti-joins read it once
-        # instead of re-scanning the fact join per pass (lazy: the first
-        # pass's full scan materializes it — A/B at sf0.1: 3.0 -> 2.7 s
-        # warm; the window shape it replaces was 1.4 s but single-task per
-        # brand at scale)
-        .localCheckpoint(eager=False)
+        .withColumn("rnk", F.row_number().over(w))
+        .where(F.col("rnk") <= k)
+        .orderBy("p_brand", "rnk")
     )
-    # total order: total_qty desc, p_partkey asc (negated so max_by sees asc)
-    ordk = F.struct(F.col("total_qty").alias("q"), (-F.col("p_partkey")).alias("npk"))
-    winners: list[DataFrame] = []
-    remaining = agg
-    for i in range(1, k + 1):
-        win = (
-            remaining.groupBy("p_brand")
-            .agg(F.max_by(F.struct("p_partkey", "p_name", "total_qty"), ordk).alias("w"))
-            .select(
-                "p_brand",
-                F.col("w.p_partkey").alias("p_partkey"),
-                F.col("w.p_name").alias("p_name"),
-                F.col("w.total_qty").alias("total_qty"),
-                F.lit(i).alias("rnk"),
-            )
-        )
-        winners.append(win)
-        if i < k:
-            remaining = remaining.join(
-                win.select("p_brand", "p_partkey"), ["p_brand", "p_partkey"], "left_anti"
-            )
-    out = winners[0]
-    for w in winners[1:]:
-        out = out.unionByName(w)
-    return out.orderBy("p_brand", "rnk")
 
 
 def order_priority_counts(orders: DataFrame, lineitem: DataFrame) -> DataFrame:

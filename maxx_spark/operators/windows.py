@@ -101,8 +101,10 @@ def drop_late_events(
        sampled boundary to pin with a localCheckpoint: the only
        driver-visible state is the (min, max) bounds aggregate. Arrival
        sequence numbers are dense by construction (they are the arrival
-       order), so equal-width chunks are balanced; an adversarially sparse
-       id space would need the old sampled-range form back.
+       order), so equal-width chunks are balanced. Sparse ids cost only
+       balance, not correctness: the decomposition holds for ANY monotone
+       chunking, so ids 0, 1, 2, 10**12 put three rows in the first chunk
+       and one in the last — uneven tasks, the same kept set.
     2. Bounded per-chunk max(ts) rollup (map-side combined — the full
        shuffle the old form paid to range-partition before counting never
        happens), prefix-max on the driver, joined back on chunk id (bounded
@@ -111,6 +113,12 @@ def drop_late_events(
        __pid — every task sorts only its own contiguous range.
     ``greatest`` skips NULLs, so the first chunk (no prefix) and each
     chunk's first row (no local predecessor) fall out naturally.
+
+    ``events`` must be deterministic (a table scan or a deterministic
+    projection of one, not a sample or a nondeterministic expression): the
+    bounds aggregate, the per-chunk rollup and the data pass each read it,
+    and a read that differs from the first would assign chunks and prefix
+    maxima from rows the data pass never sees.
     """
     spark = events.sparkSession
     if num_partitions is None:

@@ -61,6 +61,12 @@ def _warm_session(spark: SparkSession, cores: int) -> None:
         log.warning("session warmup (worker pool + pandas import) failed", exc_info=True)
 
 
+def driver_memory() -> str:
+    """Driver heap of engine sessions (``SPARK_DRIVER_MEMORY``, default 8g);
+    scripts that spark-submit engine jobs pass the same value."""
+    return os.environ.get("SPARK_DRIVER_MEMORY", "8g")
+
+
 def get_spark(
     app_name: str = "maxx_spark",
     master: str | None = None,
@@ -110,7 +116,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory", driver_memory())
         # parquet scans: 128 MB splits are the right granularity for both
         # local[32] at sf0.1 and a 1000-executor cluster at 100 TB.
         .config("spark.sql.files.maxPartitionBytes", "134217728")

@@ -126,17 +126,42 @@ def test_no_unbounded_broadcast_hints(spark, sf_dir):
     assert "Window" not in p41
 
 
-def test_top_parts_no_rank_window(spark, sf_dir):
-    """q03 scale gate (round 6): no Window anywhere — the per-brand top-k is
-    k bounded max_by aggregations whose shuffles move |brands| x partials
-    rows, never a 25-partition rank sort whose per-task rows scale with SF
-    (VERDICT r5 item 3)."""
-    from maxx_spark.plans import executed_plan
+def test_top_parts_rank_window_is_two_phase_bounded(spark, sf_dir):
+    """q03 scale gate: per-task rows stay bounded. Every Window in q03's
+    final AQE plan must read ``WindowGroupLimit Final`` over an
+    ``Exchange hashpartitioning(p_brand)`` over ``WindowGroupLimit
+    Partial``, so the per-brand sort sees at most k x map-partitions rows
+    whatever the SF. The walk must reject the same rank window without the
+    ``rnk <= k`` filter, and q03 planned with the group limit disabled."""
+    from pyspark.sql import Window
+
+    from maxx_spark.plans import window_bounds
 
     t = load_tables(spark, sf_dir, ("lineitem", "part"))
     df = R.top_parts_by_brand(t["lineitem"], t["part"])
     df.collect()
-    assert "Window" not in executed_plan(df)
+    assert window_bounds(df) == [True]
+
+    # same aggregate and rank window, no rank filter: nothing to limit
+    w = Window.partitionBy("p_brand").orderBy(F.desc("total_qty"), F.asc("p_partkey"))
+    unfiltered = (
+        t["lineitem"].join(t["part"], F.col("l_partkey") == F.col("p_partkey"))
+        .groupBy("p_brand", "p_partkey", "p_name")
+        .agg(F.sum("l_quantity").alias("total_qty"))
+        .withColumn("rnk", F.row_number().over(w))
+    )
+    unfiltered.collect()
+    assert window_bounds(unfiltered) == [False]
+
+    key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        no_limit = R.top_parts_by_brand(t["lineitem"], t["part"])
+        no_limit.collect()
+        assert window_bounds(no_limit) == [False]
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_no_unbounded_broadcast_hints_all_queries(spark, sf_dir):

@@ -485,42 +485,57 @@ def test_dedup_capped_pairs_exact(spark):
             idx.release()
 
 
+def _kept_sequential(spec, delay_min):
+    """Sequential reference of drop_late_events over (event_id, minutes)
+    pairs: arrival order = event_id; watermark = running max(ts) over
+    strictly-earlier arrivals minus delay; late iff ts < watermark."""
+    kept, mx = [], None
+    for eid, mins in sorted(spec):
+        if mx is None or mins >= mx - delay_min:
+            kept.append(eid)
+        mx = mins if mx is None else max(mx, mins)
+    return kept
+
+
+def _drop_late_ids(spark, spec, delay_min):
+    import datetime as dt
+
+    from maxx_spark.operators.windows import drop_late_events
+
+    base = dt.datetime(2024, 1, 1)
+    rows = [(eid, base + dt.timedelta(minutes=mins), eid % 3, "t", 1.0) for eid, mins in spec]
+    events = spark.createDataFrame(
+        rows, "event_id long, ts timestamp, user_id long, event_type string, value double"
+    )
+    return sorted(
+        r["event_id"]
+        for r in drop_late_events(events, delay=f"{delay_min} minutes").collect()
+    )
+
+
 def test_drop_late_events_matches_sequential_reference(spark):
     """r7: drop_late_events switched from sampled range partitions to
     deterministic event_id chunks — pin the kept set against a sequential
     reference (arrival order = event_id; watermark = running max(ts) over
     strictly-earlier arrivals minus delay; late iff ts < wm), including
     sparse/skewed id spaces and an all-late tail."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from maxx_spark.operators.windows import drop_late_events
-
-    base = dt.datetime(2024, 1, 1)
-    rows = []
     # sparse, non-contiguous ids; ts deliberately out of order with a late
     # straggler far behind the running max
     spec = [
         (3, 0), (10, 50), (11, 40), (500, 45), (501, 2), (502, 55),
         (90_000, 56), (90_001, 30), (90_002, 57), (90_003, 58),
     ]
-    for eid, mins in spec:
-        rows.append((eid, base + dt.timedelta(minutes=mins), eid % 3, "t", 1.0))
-    events = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, event_type string, value double"
-    )
-    delay_min = 10
-    kept_ref = []
-    mx = None
-    for eid, mins in sorted(spec):
-        ts = base + dt.timedelta(minutes=mins)
-        wm = None if mx is None else mx - dt.timedelta(minutes=delay_min)
-        if wm is None or ts >= wm:
-            kept_ref.append(eid)
-        mx = ts if mx is None else max(mx, ts)
-    got = sorted(
-        r["event_id"]
-        for r in drop_late_events(events, delay=f"{delay_min} minutes").collect()
-    )
-    assert got == sorted(kept_ref), (got, kept_ref)
+    kept_ref = _kept_sequential(spec, 10)
+    assert _drop_late_ids(spark, spec, 10) == kept_ref, kept_ref
+
+
+def test_drop_late_events_sparse_id_space(spark):
+    """ids 0, 1, 2, 10**12, 10**12 + 1: the equal-width chunks put three
+    rows in the first chunk and two in the last, with empty chunks between
+    — only the balance suffers. Event 2 is late (ts 5 < 30 - 10); in the
+    last chunk, whose watermark comes from the first chunk's max, 10**12 is
+    kept (25 >= 20) and 10**12 + 1 is late (12 < 20); the result equals
+    the sequential reference."""
+    spec = [(0, 0), (1, 30), (2, 5), (10**12, 25), (10**12 + 1, 12)]
+    assert _kept_sequential(spec, 10) == [0, 1, 10**12]
+    assert _drop_late_ids(spark, spec, 10) == [0, 1, 10**12]
