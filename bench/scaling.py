@@ -53,7 +53,7 @@ def stage_input(src: str, n_pages: int, n_files: int) -> int:
     from maxx_spark.session import get_spark
     from maxx_spark.streaming.source import stage_heavy_pages
 
-    spark = get_spark("stage-bench", master="local[16]")
+    spark = get_spark("stage-bench", master=f"local[{len(os.sched_getaffinity(0))}]")
     n = stage_heavy_pages(spark, src, n_pages, n_files=n_files)
     spark.stop()
     return n

@@ -19,6 +19,18 @@ driver's package root is not a path on their executors; a cluster opts in by
 installing the package on every executor and setting
 ``spark.python.daemon.module`` in ``extra_conf``.
 
+On a ``local*`` master the file listing also stays on the driver:
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` defaults to
+``2147483647``, so reading many explicit paths never starts a Spark listing
+job. A streaming micro-batch over new files names each file as a path, and a
+live trigger names about 45, past Spark's default threshold of 32. Local
+executors are threads of the driver's JVM reading the same filesystem, so
+the distributed listing is never faster; it only adds a job. In traced
+perfbench ``uniform`` runs (local[4], seeds 1 and 2) a 45-file live batch
+spent 393-635 ms in ``getBatch`` with the listing job and 23-38 ms without.
+Other masters keep Spark's default: on an object store the parallel listing
+of many paths is the faster path. An ``extra_conf`` value wins on any master.
+
 ``get_spark`` also runs a one-time session warmup that grows the Python
 worker pool and imports pandas in every worker (``SPARK_GRAFT_WARMUP=0``
 disables it).
@@ -92,6 +104,10 @@ def get_spark(
         conf[_WORKER_PYTHONPATH] = os.pathsep.join(
             p for p in (_PACKAGE_ROOT, conf.get(_WORKER_PYTHONPATH)) if p
         )
+        # list a micro-batch's explicit file paths on the driver: local
+        # executors share its JVM and filesystem, so a parallel listing job
+        # only adds ~0.4-0.6 s to a live getBatch (module docstring)
+        conf.setdefault("spark.sql.sources.parallelPartitionDiscovery.threshold", "2147483647")
 
     b = (
         SparkSession.builder.appName(app_name)
@@ -107,7 +123,10 @@ def get_spark(
         # cost (a cached plan's output partitioning may change between runs,
         # so a consumer counting on it may re-exchange) doesn't apply here:
         # consumers key on the same columns AQE preserves. Size-based and
-        # scale-neutral (measured −3 s on the sf0.1 dedup chain).
+        # scale-neutral. sf0.1, 4 cores, 5 interleaved pairs without it
+        # (BENCH/dedup_ab_cached_plan_partitioning.json): dedup chain
+        # q12..q63 26.2 -> 28.9 s (slower in 5/5), q13 7.1 -> 9.2 s, q63
+        # 2.7 -> 3.2 s, shared-index total 7.2 -> 7.5 s.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # bound Arrow batches: html BINARY payloads can be large; at 100 TB

@@ -908,3 +908,40 @@ def test_throughput_summary_reports_state(spark, tmp_path):
     assert first["state_rows_total"] > 0 and first["state_memory_bytes"] > 0
     assert first["rows_dropped_by_watermark"] == 0
     assert detail[1]["watermark"] > first["watermark"]
+
+
+def test_local_session_lists_batch_files_on_driver(spark, tmp_path):
+    """On a local master a micro-batch's files are listed on the driver
+    (``session.get_spark``): one trigger over 40 one-page files, more than
+    Spark's default parallel-listing threshold of 32 paths, runs exactly one
+    Spark job per committed batch in the query's job group, the sink's data
+    write. With Spark's default the group also holds a listing job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from maxx_spark.gen import generate_pages_rows
+
+    rows = generate_pages_rows(n_projects=1, n_filler=40, seed=7)[:40]
+    assert len(rows) == 40
+    schema = pa.schema([
+        ("url", pa.string()), ("warc_ts", pa.timestamp("us", tz="UTC")),
+        ("html", pa.binary()), ("text", pa.string()), ("lang", pa.string()),
+    ])
+    src = tmp_path / "pages40"
+    src.mkdir()
+    for i, (url, ts, html, text, lang) in enumerate(rows):
+        table = pa.table({"url": [url], "warc_ts": [ts.replace(tzinfo=dt.timezone.utc)],
+                          "html": [html], "text": [text], "lang": [lang]}, schema=schema)
+        pq.write_table(table, str(src / f"page-{i:03d}.parquet"))
+
+    q, sink = extraction_query(spark, str(src), str(tmp_path / "out40"),
+                               str(tmp_path / "ck40"), max_files_per_trigger=None,
+                               available_now=True)
+    q.awaitTermination(300)
+    assert q.exception() is None
+    assert len(sink.committed_batches()) == 1
+    assert sink.read_committed(spark).select("url").distinct().count() > 0
+    sc = spark.sparkContext
+    # the status store is fed by the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(q.runId)) == 1
