@@ -60,7 +60,7 @@ def stage(spark, src: str, n_events: int, n_users: int, n_files: int,
         .drop("arrival")
     )
     df.write.mode("overwrite").parquet(src)
-    # pin the micro-batch order: 32 parallel write tasks finish in a
+    # pin the micro-batch order: parallel write tasks finish in a
     # nondeterministic order, and FileStreamSource batches by mtime — a
     # different file order shifts the watermark progression and the
     # late-drop set, swinging rows_out ~20% run-to-run. part-file names
@@ -125,7 +125,7 @@ def main() -> None:
     from maxx_spark.session import get_spark
     from maxx_spark.streaming.cep import funnel_stream, session_paths_stream
 
-    spark = get_spark("cep-bench", master="local[32]")
+    spark = get_spark("cep-bench", master=f"local[{len(os.sched_getaffinity(0))}]")
     src = "/tmp/maxx_cep_events"
     stage(spark, src, args.events, args.users, args.files, skew=args.skew)
 

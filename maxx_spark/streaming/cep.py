@@ -15,10 +15,18 @@ before reaching the operator — the standard contract, identical to E2).
 Because finalized events are replayed in event-time order and anything
 older than the watermark can never arrive, a finalized event that does not
 match the user's current step is discarded exactly — no earlier-ts event
-can appear afterwards to change the machine's past. Completed funnels drop their state immediately;
-incomplete funnels are evicted by an event-time timer ``deadline`` past the
-user's newest event (state is bounded by ACTIVE users in the deadline
-horizon, not by corpus history — the E6 lesson, resolver.py:118).
+can appear afterwards to change the machine's past. Completed funnels keep
+a tombstone and every funnel is evicted by an event-time timer ``deadline``
+past the user's newest event (state is bounded by ACTIVE users in the
+deadline horizon, not by corpus history — the E6 lesson, resolver.py:118).
+
+Both operators (funnel, session paths) buffer through one replay core,
+``_replay``, and keep only their step machine, state schema (the three
+buffer fields first) and timer policy. A null ``ts`` event cannot be
+ordered, so both ignore it: never buffered, replayed or on the user's
+clock. The batch mirror q64 still counts a null-ts step-0 event as a
+funnel entry (its ``min(ts)`` is NULL and no later step follows); its
+oracle pair is unchanged.
 
 No filter sits between ``withWatermark`` and the stateful operator
 (CLAUDE.md invariant: Catalyst would push it below the watermark node and
@@ -46,6 +54,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from maxx_spark.streaming.clock import event_ms
+
 FUNNEL_OUT = StructType(
     [
         StructField("user_id", LongType()),
@@ -66,45 +76,52 @@ FUNNEL_STATE = StructType(
 )
 
 
-def _ts_ms(ts) -> int:
-    if ts is None:
-        return 0
-    return int(pd.Timestamp(ts).value // 1_000_000)
+def _replay(pdfs: Iterator[pd.DataFrame], state: GroupState, keep=None):
+    """The watermark-replay core of both operators. Merges the buffered
+    events (the state's first three fields) with the group's input, keeping
+    only event types in ``keep`` (all when None) and skipping null ts.
+    Returns ``(ripe, held, wm, newest)``: the events strictly below the
+    watermark as sorted (ts, event_id, event_type) tuples, the rest as the
+    three buffer lists for ``state.update``, the watermark, and the newest
+    input ts (0 without input)."""
+    buf = list(zip(*state.get[:3])) if state.exists else []
+    newest = 0
+    for pdf in pdfs:  # timer firings carry no input rows
+        for ms, eid, etype in zip(event_ms(pdf["ts"]), pdf["event_id"].tolist(), pdf["event_type"]):
+            if ms is None:
+                continue
+            newest = max(newest, ms)
+            if keep is None or etype in keep:
+                buf.append((ms, eid, str(etype)))
+    wm = state.getCurrentWatermarkMs()
+    # STRICTLY below the watermark only (r6 advisory): Spark's late
+    # filter admits an event with ts exactly equal to the watermark, so
+    # finalizing at <= wm could order a same-ms straggler after events
+    # already replayed — ts == wm stays buffered until wm passes it
+    ripe = sorted(ev for ev in buf if ev[0] < wm)
+    held = [ev for ev in buf if ev[0] >= wm]
+    return ripe, [[ev[i] for ev in held] for i in range(3)], wm, newest
+
+
+def _attach(events: DataFrame, fn, out: StructType, state: StructType, delay: str) -> DataFrame:
+    e = events.select("user_id", "event_id", "event_type", "ts").withWatermark("ts", delay)
+    return e.groupBy("user_id").applyInPandasWithState(
+        fn, out, state, "append", GroupStateTimeout.EventTimeTimeout
+    )
 
 
 def _make_funnel_fn(steps: tuple[str, ...], deadline_ms: int):
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
         (user_id,) = key
-        if state.exists:
-            buf_ts, buf_id, buf_type, step_ts, max_ts = state.get
-            buf = list(zip(buf_ts, buf_id, buf_type))
-            step_ts = list(step_ts)
-        else:
-            buf, step_ts, max_ts = [], [], 0
+        step_ts, max_ts = (list(state.get[3]), state.get[4]) if state.exists else ([], 0)
         was_complete = len(step_ts) >= len(steps)
-
-        if not state.hasTimedOut:  # timer firings carry no input rows
-            # buffer only types that can still match: steps only advance,
-            # so anything outside the REMAINING suffix can never be used —
-            # per-user state shrinks as the funnel progresses (a bot
-            # re-sending completed-step types buffers nothing)
-            remaining = set(steps[len(step_ts):])
-            for pdf in pdfs:
-                for ts, eid, etype in zip(pdf["ts"], pdf["event_id"], pdf["event_type"]):
-                    ms = _ts_ms(ts)
-                    max_ts = max(max_ts, ms)
-                    if etype in remaining:  # other types only advance the clock
-                        buf.append((ms, int(eid), str(etype)))
-
-        # finalize: replay events at or below the watermark in strict
-        # (ts, event_id) order; later events stay buffered
-        wm = state.getCurrentWatermarkMs()
-        # STRICTLY below the watermark only (r6 advisory): Spark's late
-        # filter admits an event with ts exactly equal to the watermark, so
-        # finalizing at <= wm could order a same-ms straggler after events
-        # already replayed — ts == wm stays buffered until wm passes it
-        ripe = sorted(ev for ev in buf if ev[0] < wm)
-        buf = [ev for ev in buf if ev[0] >= wm]
+        # buffer only types that can still match: steps only advance,
+        # so anything outside the REMAINING suffix can never be used —
+        # per-user state shrinks as the funnel progresses (a bot
+        # re-sending completed-step types buffers nothing); other types
+        # only advance the clock
+        ripe, held, wm, newest = _replay(pdfs, state, keep=set(steps[len(step_ts):]))
+        max_ts = max(max_ts, newest)
         out: list[tuple] = []
         for ms, eid, etype in ripe:
             if len(step_ts) >= len(steps):
@@ -126,23 +143,15 @@ def _make_funnel_fn(steps: tuple[str, ...], deadline_ms: int):
             # horizon (the standard streaming-state guarantee bound).
             state.update(([], [], [], step_ts, max_ts))
             state.setTimeoutTimestamp(max(max_ts, wm) + deadline_ms)
-        elif state.hasTimedOut and not buf and wm >= max_ts + deadline_ms:
+        elif state.hasTimedOut and not held[0] and wm >= max_ts + deadline_ms:
             state.remove()  # idle past the deadline: expire the funnel
         else:
-            state.update(
-                (
-                    [ev[0] for ev in buf],
-                    [ev[1] for ev in buf],
-                    [ev[2] for ev in buf],
-                    step_ts,
-                    max_ts,
-                )
-            )
-            if buf:
+            state.update((*held, step_ts, max_ts))
+            if held[0]:
                 # ripeness timer: groups get NO further invocations without
                 # input, so re-fire just past the earliest buffered event
                 # (strictly ahead of wm — anything < wm was finalized above)
-                state.setTimeoutTimestamp(min(ev[0] for ev in buf) + 1)
+                state.setTimeoutTimestamp(min(held[0]) + 1)
             else:
                 # expiry timer: deadline past the newer of user clock and
                 # watermark (timestamps behind the watermark throw)
@@ -173,14 +182,7 @@ def funnel_stream(
         raise ValueError(
             f"deadline must look like '<n> second(s)|minute(s)|hour(s)', got {deadline!r}"
         ) from None
-    e = events.select("user_id", "event_id", "event_type", "ts").withWatermark("ts", delay)
-    return e.groupBy("user_id").applyInPandasWithState(
-        _make_funnel_fn(tuple(steps), deadline_ms),
-        FUNNEL_OUT,
-        FUNNEL_STATE,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
+    return _attach(events, _make_funnel_fn(tuple(steps), deadline_ms), FUNNEL_OUT, FUNNEL_STATE, delay)
 
 
 # ---------------------------------------------------------------------------
@@ -217,31 +219,16 @@ def _make_paths_fn(gap_ms: int, max_len: int):
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
         (user_id,) = key
         if state.exists:
-            buf_ts, buf_id, buf_type, cur_ts, cur_type, cur_last, cur_n = state.get
-            buf = list(zip(buf_ts, buf_id, buf_type))
+            cur_ts, cur_type, cur_last, cur_n = state.get[3:]
             head = list(zip(cur_ts, cur_type))
         else:
-            buf, head, cur_last, cur_n = [], [], 0, 0
-
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                for ts, eid, etype in zip(pdf["ts"], pdf["event_id"], pdf["event_type"]):
-                    buf.append((_ts_ms(ts), int(eid), str(etype)))
-
-        wm = state.getCurrentWatermarkMs()
-        # STRICTLY below the watermark only (r6 advisory): Spark's late
-        # filter admits an event with ts exactly equal to the watermark, so
-        # finalizing at <= wm could order a same-ms straggler after events
-        # already replayed — ts == wm stays buffered until wm passes it
-        ripe = sorted(ev for ev in buf if ev[0] < wm)
-        buf = [ev for ev in buf if ev[0] >= wm]
+            head, cur_last, cur_n = [], 0, 0
+        ripe, held, wm, _ = _replay(pdfs, state)
 
         out: list[tuple] = []
 
         def close():
-            out.append(
-                (user_id, head[0][0], ">".join(t for _, t in head), cur_n)
-            )
+            out.append((user_id, head[0][0], ">".join(t for _, t in head), cur_n))
 
         for ms, eid, etype in ripe:
             if cur_n and ms > cur_last + gap_ms:
@@ -256,23 +243,13 @@ def _make_paths_fn(gap_ms: int, max_len: int):
             close()
             head, cur_n = [], 0
 
-        if not cur_n and not buf:
+        if not cur_n and not held[0]:
             if state.exists:
                 state.remove()  # nothing pending: a future event recreates state
         else:
-            state.update(
-                (
-                    [ev[0] for ev in buf],
-                    [ev[1] for ev in buf],
-                    [ev[2] for ev in buf],
-                    [e[0] for e in head],
-                    [e[1] for e in head],
-                    cur_last,
-                    cur_n,
-                )
-            )
-            if buf:
-                state.setTimeoutTimestamp(min(ev[0] for ev in buf) + 1)
+            state.update((*held, [e[0] for e in head], [e[1] for e in head], cur_last, cur_n))
+            if held[0]:
+                state.setTimeoutTimestamp(min(held[0]) + 1)
             else:  # open session only: fire once its gap elapses
                 state.setTimeoutTimestamp(max(cur_last + gap_ms, wm) + 1)
         if out:
@@ -298,11 +275,6 @@ def session_paths_stream(
     endless session grows NOTHING with session length) — arrival-rate
     bounded. groupBy(path) counts over a drained stream equal the batch
     mirror's n_sessions (parity pinned by test)."""
-    e = events.select("user_id", "event_id", "event_type", "ts").withWatermark("ts", delay)
-    return e.groupBy("user_id").applyInPandasWithState(
-        _make_paths_fn(int(gap_seconds) * 1000, max_len),
-        PATHS_OUT,
-        PATHS_STATE,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
+    return _attach(
+        events, _make_paths_fn(int(gap_seconds) * 1000, max_len), PATHS_OUT, PATHS_STATE, delay
     )

@@ -37,6 +37,7 @@ from pyspark.sql.types import (
 )
 
 from maxx_spark.operators.codeunits import with_host
+from maxx_spark.streaming.clock import event_ms
 
 # Clock-tick sentinel keys. Rows that carry no def/need/member payload must
 # still REACH the stateful operator (a filter between withWatermark and the
@@ -96,9 +97,8 @@ def _resolve_fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
 
     out: list[tuple] = []
     for pdf in pdfs:
-        for side, path, kind, ts in zip(pdf["side"], pdf["unit_path"], pdf["kind"], pdf["warc_ts"]):
-            ts_ms = int(pd.Timestamp(ts).value // 1_000_000) if ts is not None else 0
-            max_ts = max(max_ts, ts_ms)
+        max_ts = max([max_ts, *(ms for ms in event_ms(pdf["warc_ts"]) if ms is not None)])
+        for side, path, kind in zip(pdf["side"], pdf["unit_path"], pdf["kind"]):
             if side == "def":
                 if def_kind is None:
                     def_kind = kind
@@ -112,8 +112,8 @@ def _resolve_fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
                     pending.append(path)
 
     state.update((def_kind, pending, max_ts))
-    # state eviction horizon: 10 minutes of event time past the newest event
-    state.setTimeoutTimestamp(max_ts + 600_000)
+    # state eviction horizon: 10 minutes past the newer of clock and watermark
+    state.setTimeoutTimestamp(max(max_ts, state.getCurrentWatermarkMs()) + 600_000)
     if out:
         yield pd.DataFrame(out, columns=RESOLVE_OUT.fieldNames())
 
@@ -210,16 +210,15 @@ def _assemble_fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
         return
 
     for pdf in pdfs:
-        for stem, kind, ts in zip(pdf["stem"], pdf["kind"], pdf["warc_ts"]):
-            ts_ms = int(pd.Timestamp(ts).value // 1_000_000) if ts is not None else 0
-            max_ts = max(max_ts, ts_ms)
+        max_ts = max([max_ts, *(ms for ms in event_ms(pdf["warc_ts"]) if ms is not None)])
+        for stem, kind in zip(pdf["stem"], pdf["kind"]):
             if stem not in members:
                 members.append(stem)
             if kind == "class":
                 has_classdef = True
 
     state.update((members, has_classdef, max_ts))
-    state.setTimeoutTimestamp(max_ts + 120_000)  # session gap: 2 min event time
+    state.setTimeoutTimestamp(max(max_ts, state.getCurrentWatermarkMs()) + 120_000)  # session gap
 
 
 def assemble_classfolders_stream(units: DataFrame, delay: str = "10 minutes") -> DataFrame:

@@ -189,3 +189,25 @@ def test_funnel_no_restart_after_completion():
     ]
     out, _ = _drive(fn, batches, 5_000, horizon_ms=100_000_000)
     assert out == [(7, 0, "view", 1000)]
+
+
+def test_null_event_time_is_ignored():
+    """Spark hands a null ts over as NaT, not None. Such an event cannot be
+    ordered: neither operator may buffer, replay or emit it (a NaT once
+    replayed as ts -9223372036855 ms, entered the funnel at step 0 and
+    opened a session there)."""
+    pdf = _pdf([(0, 0, "view"), (60_000, 1, "click"), (61_000, 2, "purchase")])
+    pdf.loc[0, "ts"] = pd.NaT
+    fns = {
+        "funnel": _make_funnel_fn(STEPS, deadline_ms=10_000_000),
+        "paths": _make_paths_fn(gap_ms=8_000, max_len=3),
+    }
+    got = {}
+    for name, fn in fns.items():
+        state, out = FakeState(), []
+        out += [tuple(r) for df in fn((7,), iter([pdf]), state) for r in df.itertuples(index=False)]
+        state.wm, state.hasTimedOut = 100_000_000, True  # the ripeness timer fires
+        out += [tuple(r) for df in fn((7,), iter([]), state) for r in df.itertuples(index=False)]
+        got[name] = out
+    # no view with a ts, so no funnel entry; the session starts at the click
+    assert got == {"funnel": [], "paths": [(7, 60_000, "click>purchase", 2)]}

@@ -651,6 +651,60 @@ def test_resolver_state_tracks_horizon_not_corpus(spark, tmp_path):
     assert peak < total_keys, (peak, total_keys)
 
 
+def _fresh_group_state(schema, wm_ms):
+    """Spark's own GroupState for a key without state, in a batch whose
+    watermark is ``wm_ms`` (what the executor hands the Python worker)."""
+    from pyspark.sql import Row
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    return GroupState(
+        Row(), 0, wm_ms, GroupStateTimeout.EventTimeTimeout, False, True,
+        False, False, False, GroupState.NO_TIMESTAMP, b"", schema,
+    )
+
+
+def test_resolver_null_event_time_arms_timer_past_watermark():
+    """A def row whose warc_ts is null (NaT in pandas) must not move the
+    key's clock, and the eviction timer arms from max(clock, watermark): a
+    timer behind the watermark raises INVALID_TIMEOUT_TIMESTAMP in Spark's
+    GroupState and fails the query."""
+    import json
+
+    import pandas as pd
+
+    from maxx_spark.streaming.resolver import RESOLVE_STATE, _resolve_fn
+
+    wm = 1_704_067_200_000
+    state = _fresh_group_state(RESOLVE_STATE, wm)
+    pdf = pd.DataFrame(
+        {"side": ["def"], "unit_path": ["Base"], "kind": ["class"],
+         "warc_ts": pd.Series([pd.NaT], dtype="datetime64[ns]")}
+    )
+    assert list(_resolve_fn(("h", "Base"), iter([pdf]), state)) == []
+    assert tuple(state.get) == ("class", [], 0)
+    assert json.loads(state.json())["timeoutTimestamp"] == wm + 600_000
+
+
+def test_assembler_null_event_time_arms_timer_past_watermark():
+    """Class-folder assembly: same rule as the resolver for a null warc_ts
+    member row (clock unmoved, session-gap timer from the watermark)."""
+    import json
+
+    import pandas as pd
+
+    from maxx_spark.streaming.resolver import ASSEMBLE_STATE, _assemble_fn
+
+    wm = 1_704_067_200_000
+    state = _fresh_group_state(ASSEMBLE_STATE, wm)
+    pdf = pd.DataFrame(
+        {"stem": ["Ledger"], "kind": ["class"],
+         "warc_ts": pd.Series([pd.NaT], dtype="datetime64[ns]")}
+    )
+    assert list(_assemble_fn(("h", "Ledger"), iter([pdf]), state)) == []
+    assert tuple(state.get) == (["Ledger"], True, 0)
+    assert json.loads(state.json())["timeoutTimestamp"] == wm + 120_000
+
+
 def test_streaming_funnel_matches_batch(spark, tmp_path):
     """Streaming CEP funnel (streaming/cep.py): events arriving in REVERSE
     step order across micro-batches (purchases first, views last) are
@@ -833,6 +887,63 @@ def test_streaming_funnel_resumes_from_checkpoint(spark, tmp_path):
     all_events = spark.read.schema(schema).parquet(src)
     batch_n = {r["step_idx"]: r["n_users"] for r in event_funnel(all_events).collect()}
     assert batch_n == {i: sum(1 for u in got_all if u[1] == i) for i in range(3)}
+
+
+def test_streaming_session_paths_resumes_from_checkpoint(spark, tmp_path):
+    """An OPEN session survives a restart: run A finalizes the user's first
+    two events into the open session (3 h gap, so it stays open) and stops;
+    run B (same checkpoint, new files) chains a third event onto the
+    restored session and the watermark then closes it. The session is
+    emitted exactly once, in run B, whole."""
+    from maxx_spark.streaming.cep import session_paths_stream
+    import time as _time
+
+    t0 = dt.datetime(2024, 9, 2, 0, 0, 0)
+    h = lambda x: t0 + dt.timedelta(hours=x)
+    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
+    src = str(tmp_path / "resume_sess_events")
+    ckpt = str(tmp_path / "ck_resume_sess")
+    out_dir = str(tmp_path / "resume_sess_out")
+
+    def _write(rows, off):
+        before = set(glob.glob(f"{src}/*.parquet"))
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
+        now = _time.time()
+        for f in set(glob.glob(f"{src}/*.parquet")) - before:
+            os.utime(f, (now + off, now + off))
+
+    def _run_leg():
+        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+        q = (
+            session_paths_stream(stream, gap_seconds=3 * 3600, delay="10 minutes")
+            .writeStream.foreachBatch(
+                lambda df, bid: df.write.mode("append").parquet(out_dir)
+            )
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(300)
+        got = spark.read.parquet(out_dir).collect() if glob.glob(f"{out_dir}/*.parquet") else []
+        return sorted(
+            (r["session_start_ms"], r["path"], r["n_events"]) for r in got if r["user_id"] == 1
+        )
+
+    # run A: view + click, then two heartbeats (watermark advance + timer
+    # batch) finalize both into user 1's open session
+    _write([(0, h(0), 1, "view", 1.0, "{}"),
+            (1, h(0) + dt.timedelta(minutes=1), 1, "click", 1.0, "{}")], 0)
+    _write([(100, h(1), 99, "noop", 1.0, "{}")], 60)
+    _write([(101, h(2), 99, "noop", 1.0, "{}")], 120)
+    assert _run_leg() == []  # the session is still open at the stop
+
+    # run B: the purchase lands inside the gap of the restored session;
+    # two late heartbeats push the watermark past its gap horizon
+    _write([(2, h(3), 1, "purchase", 1.0, "{}")], 180)
+    _write([(102, h(8), 99, "noop", 1.0, "{}")], 240)
+    _write([(103, h(9), 99, "noop", 1.0, "{}")], 300)
+    start_ms = int(h(0).replace(tzinfo=dt.timezone.utc).timestamp() * 1000)
+    assert _run_leg() == [(start_ms, "view>click>purchase", 3)]
 
 
 def _staged_files(spark, src, batches, schema):
