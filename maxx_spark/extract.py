@@ -332,9 +332,8 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(data, columns=cols)
 
 
-def extract_code_units(pages: DataFrame, prefilter: bool = True) -> DataFrame:
+def extract_code_units(pages: DataFrame) -> DataFrame:
     """pages → code_units. Works identically on batch and streaming
     DataFrames (mapInPandas is streaming-compatible)."""
-    src = matlab_pages(pages) if prefilter else pages
-    src = src.select("url", "warc_ts", "html", "text")
+    src = matlab_pages(pages).select("url", "warc_ts", "html", "text")
     return src.mapInPandas(_extract_batches, CODE_UNITS)

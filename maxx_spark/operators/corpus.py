@@ -16,8 +16,8 @@ path) with exact ANSI-SQL oracles:
   bounded), never the corpus; the sample join carries no broadcast hint
   (AQE broadcasts the rollup at runtime when small).
 - ``quality_stratify``: exact per-language ntile via distributed range
-  ranking (the scale path, default) or a per-language sort window (the
-  directly-stated reference semantics) — identical output, test-pinned.
+  ranking — no per-language sort window; a test pins it against the
+  literal ntile window.
 - ``shard_assignment``: map-side-combining groupBy over n_shards keys.
 
 Reference parity note: the reference engine (watermarkhu/maxx) stops at
@@ -313,30 +313,25 @@ def training_pipeline(
     return sequence_packing(train, budget=budget, shard_size=shard_size)
 
 
-def quality_stratify(
-    documents: DataFrame, n_buckets: int = 10, method: str = "ranked"
-) -> DataFrame:
+def quality_stratify(documents: DataFrame, n_buckets: int = 10) -> DataFrame:
     """Per-language quality stratification: every document gets an ntile
     bucket (1 = best) within its language, ranked by the engine's quality
     composite (descending) with doc_id as the deterministic tie-break —
     the selection primitive behind "keep the top decile per language".
 
-    Two physical strategies, IDENTICAL output (a test pins their equality;
-    the oracle checks the production path against exact SQL ntile):
-
-    - ``method="ntile"`` — the reference semantics stated directly: one
-      exchange on ``lang`` + ntile over a per-language sort. Exact, but at
-      web scale one language dominates the corpus (``en`` is most of the
-      crawl) and its whole partition sorts on ONE task.
-    - ``method="ranked"`` (default, the scale path) — exact per-language
-      rank via ``range_ranked`` on (lang, quality desc, doc_id): range
-      partitioning spreads the hot language across many partitions and the
-      rank is exact (strict total order — doc_id unique), then the bucket
-      comes from ntile's closed form on (rank, n_lang): with q = n div b,
-      r = n mod b, the first r buckets take q+1 rows —
-      bucket = ceil(rank/(q+1)) while rank <= r*(q+1), else
-      r + ceil((rank - r*(q+1))/q). Per-language row counts are a bounded
-      rollup (one row per language).
+    The reference semantics is ``ntile(n_buckets) OVER (PARTITION BY lang
+    ORDER BY quality DESC, doc_id)`` (the oracle runs exactly that SQL; a
+    test compares against the same Spark window). The window is not the
+    plan: at web scale one language dominates the corpus (``en`` is most
+    of the crawl) and its whole partition would sort on ONE task. Instead
+    the exact per-language rank comes from ``range_ranked`` on (lang,
+    quality desc, doc_id): range partitioning spreads the hot language
+    across many partitions and the rank is exact (strict total order —
+    doc_id unique), then the bucket comes from ntile's closed form on
+    (rank, n_lang): with q = n div b, r = n mod b, the first r buckets
+    take q+1 rows — bucket = ceil(rank/(q+1)) while rank <= r*(q+1), else
+    r + ceil((rank - r*(q+1))/q). Per-language row counts are a bounded
+    rollup (one row per language).
 
     Why not approx-quantile cutoffs: the composite is a small integer
     (0..4), so ties are the COMMON case — cutoff bucketing sends every tied
@@ -346,13 +341,6 @@ def quality_stratify(
     """
     q = quality_parts(F.col("text"))["composite"]
     base = documents.select("lang", "doc_id", q.alias("quality"))
-    if method == "ntile":
-        w = Window.partitionBy("lang").orderBy(F.col("quality").desc(), F.col("doc_id"))
-        return base.select(
-            "lang", "doc_id", "quality", F.ntile(n_buckets).over(w).alias("bucket")
-        ).orderBy("lang", "doc_id")
-    if method != "ranked":
-        raise ValueError(f"unknown quality_stratify method: {method!r}")
     ranked = range_ranked(
         base,
         [F.asc("lang"), F.desc("quality"), F.asc("doc_id")],
@@ -366,7 +354,7 @@ def quality_stratify(
     ).withColumnRenamed("lang", "__lang")
     joined = (
         # null-safe equality: a NULL language is its own ntile partition in
-        # the window path, so the rank path must not drop those rows
+        # the reference window, so the rank path must not drop those rows
         ranked.join(lang_tab, F.col("lang").eqNullSafe(F.col("__lang"))).drop("__lang")
         .withColumn("__rho", F.col("__gr") - F.col("__start") + F.lit(1))  # 1-based in-lang rank
         .withColumn("__q", F.expr(f"__n DIV {int(n_buckets)}"))

@@ -325,9 +325,9 @@ def dedup_clusters(
     doc_id of its component (the canonical representative a training
     pipeline keeps). Emits (doc_id, cluster_id, cluster_size) for docs
     that belong to a component of >= 2. Near-dup components are copies of
-    the same content, so their diameters are tiny (mostly cliques through
-    the canonical text, diameter <= 2-3) and min-label propagation
-    converges in a few rounds; see connected_components for the solve.
+    the same content (mostly cliques through the canonical text), so the
+    distributed star loop settles in a few rounds; see
+    connected_components for the solve.
     """
     pairs = minhash_lsh_pairs(
         index, num_hashes=num_hashes, bands=bands, threshold=threshold
@@ -351,14 +351,11 @@ def connected_components(
     distributed loop runs; a near-dup pair graph at corpus scale can be
     arbitrarily large, so that is the default shape, not a fallback.
 
-    The distributed loop (_cc_auto) is min-label propagation (rounds =
-    component DIAMETER) that escalates to large-star/small-star (_cc_star,
-    Kiveris et al. 2014: O(log^2 n) rounds on any graph, same per-round
-    join+agg shape) when it has not converged after K rounds.
-    Non-convergence is itself the high-diameter probe — a component of
-    diameter <= K is solved by then — so the common dedup graph pays zero
-    extra rounds and no heuristic structure sniff is needed. Every path
-    labels identically (test-pinned against union-find).
+    The distributed loop is large-star/small-star (_cc_star, Kiveris et
+    al. 2014): O(log^2 n) rounds on any graph, whatever its diameter. It
+    raises RuntimeError if it has not settled within ``max_iters`` rounds
+    rather than return partial labels. Both paths label identically
+    (test-pinned against union-find).
     """
     pairs = pairs.localCheckpoint()
     n_edges = pairs.count()
@@ -366,7 +363,7 @@ def connected_components(
         return _cc_unionfind_local(pairs)
     a, b = pairs.columns[0], pairs.columns[1]
     undirected = pairs.select(F.col(a).alias("doc_a"), F.col(b).alias("doc_b"))
-    labels, _ = _cc_auto(undirected, max_iters)
+    labels, _ = _cc_star(undirected, max_iters)
     sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
         labels.join(sizes, "label")
@@ -379,103 +376,19 @@ def connected_components(
     )
 
 
-def _cc_propagation(pairs: DataFrame, max_iters: int):
-    """Min-label propagation loop → ((doc_id, label) DataFrame, rounds,
-    converged). One shuffle join + agg per round; localCheckpoint cuts the
-    lineage; converges in diameter rounds. ``converged`` is True iff the
-    probe saw a stable fixpoint within the budget (the signal _cc_auto
-    escalates on)."""
-    edges = pairs.unionByName(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).localCheckpoint()
-    labels = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .localCheckpoint()
-    )
-    prev_sum, rounds, converged = None, 0, False
-    for _ in range(max_iters):
-        rounds += 1
-        neighbor_min = (
-            edges.join(labels, edges.doc_b == labels.doc_id)
-            .groupBy(F.col("doc_a").alias("doc_id"))
-            .agg(F.min("label").alias("nmin"))
-        )
-        labels = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        # convergence probe: sum of labels is monotone non-increasing and
-        # strictly decreases while any label still moves, so equality ⇔
-        # fixpoint — one scalar agg per round, no data collect
-        cur_sum = labels.agg(F.sum("label")).first()[0]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    return labels, rounds, converged
-
-
-def _cc_auto(pairs: DataFrame, max_iters: int, escalate_after: int = 4):
-    """Adaptive loop → ((doc_id, label), rounds): propagation for up to
-    ``escalate_after`` rounds, then — only if the fixpoint probe has not
-    fired — star on the LABEL-QUOTIENT graph (each original edge (a, b)
-    becomes (label(a), label(b)); self-loops drop, duplicates collapse).
-
-    Why the hand-off is exact: labels only decrease and the component-min
-    node keeps its own id forever, so the quotient component containing a
-    partially-converged component still contains the true min as a node,
-    and star labels every quotient node with it. Composing
-    node → propagation label → star label therefore yields exactly the
-    component min for every original node. Quotient nodes whose whole
-    component already collapsed to one label fall out of the quotient edge
-    set; the left join keeps their (already final) label.
-
-    The quotient graph is never larger than the input edge set and shrinks
-    by whatever progress the propagation rounds made — on the adversarial
-    long-chain graph it is the chain of surviving labels; on the common
-    dedup graph escalation never triggers at all.
-    """
-    labels, rounds, converged = _cc_propagation(pairs, min(escalate_after, max_iters))
-    if converged or rounds >= max_iters:
-        return labels, rounds
-    la = labels.select(F.col("doc_id").alias("doc_a"), F.col("label").alias("__la"))
-    lb = labels.select(F.col("doc_id").alias("doc_b"), F.col("label").alias("__lb"))
-    quotient = (
-        pairs.join(la, "doc_a")
-        .join(lb, "doc_b")
-        .where(F.col("__la") != F.col("__lb"))
-        .select(F.col("__la").alias("doc_a"), F.col("__lb").alias("doc_b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    star_labels, star_rounds = _cc_star(quotient, max_iters - rounds)
-    quot_final = star_labels.select(
-        F.col("doc_id").alias("label"), F.col("label").alias("__sl")
-    )
-    composed = labels.join(quot_final, "label", "left").select(
-        "doc_id", F.coalesce(F.col("__sl"), F.col("label")).alias("label")
-    )
-    return composed, rounds + star_rounds
-
-
 def _cc_star(pairs: DataFrame, max_iters: int):
     """Alternating large-star/small-star loop → ((doc_id, label), rounds).
 
     large-star: every node u re-points its LARGER neighbors at
     m(u) = min(N(u) ∪ {u}); small-star: orient edges high→low, every high
     node re-points its smaller neighbors (and itself) at the neighborhood
-    min. Each half-round is one groupBy(min-agg) + one join — the same
-    shuffle shape as a propagation round — and the edge set monotonically
-    contracts toward per-component stars (node, component-min). Converges
-    in O(log^2 n) rounds on ANY graph; the convergence probe is the edge
-    multiset checksum (count + endpoint sums + order-free hash), which is
-    stationary exactly at the star fixpoint.
+    min. Each half-round is one groupBy(min-agg) + one join, and the edge
+    set monotonically contracts toward per-component stars (node,
+    component-min). Converges in O(log^2 n) rounds on ANY graph; the
+    convergence probe is the edge multiset checksum (count + order-free
+    hashes), which is stationary exactly at the star fixpoint. Reaching
+    ``max_iters`` before the checksum settles raises RuntimeError: the
+    edges are then still mid-contraction and their labels are wrong.
     """
     nodes = pairs.select(F.col("doc_a").alias("doc_id")).unionByName(
         pairs.select(F.col("doc_b").alias("doc_id"))
@@ -500,9 +413,8 @@ def _cc_star(pairs: DataFrame, max_iters: int):
         ).first()
         return tuple(row)
 
-    prev, rounds = None, 0
-    for _ in range(max_iters):
-        rounds += 1
+    prev = None
+    for rounds in range(1, max_iters + 1):
         # large-star over the symmetrized graph: (v, m(u)) for v ∈ N(u), v > u
         sym = edges.unionByName(
             edges.select(F.col("lo").alias("hi"), F.col("hi").alias("lo"))
@@ -531,10 +443,12 @@ def _cc_star(pairs: DataFrame, max_iters: int):
         if cur == prev:
             break
         prev = cur
-    # fixpoint edges are per-component stars: hi → component min. The
-    # min-agg also keeps the output one-row-per-node if the iteration cap
-    # were ever hit mid-contraction (a node still holding several lows) —
-    # at a true fixpoint it is the identity.
+    else:
+        raise RuntimeError(
+            f"connected components did not converge in max_iters={max_iters} rounds"
+        )
+    # fixpoint edges are per-component stars: hi → component min, so the
+    # min-agg is the identity and yields one row per non-root node
     final = edges.groupBy(F.col("hi").alias("doc_id")).agg(F.min("lo").alias("label"))
     labels = nodes.join(final, "doc_id", "left").select(
         "doc_id", F.coalesce(F.col("label"), F.col("doc_id")).alias("label")
@@ -579,7 +493,7 @@ def segment_dedup(documents: DataFrame, k: int = 10, salts: int = 32) -> DataFra
     task, NOT uniform; the default is 32 (≈3% ceiling) and the salt draws
     entropy from (doc_id, segment position) so repeated occurrences inside
     one document also spread. Residual hotspots beyond that rely on AQE
-    skew-join splitting (enabled in session.py); size ``salts`` ≈ target
+    skew-join splitting (on by Spark default); size ``salts`` ≈ target
     parallelism for the 100 TB shape.
     """
     d = documents.select("doc_id", F.split(normalized(F.col("text")), " ").alias("__w"))

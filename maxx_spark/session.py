@@ -3,7 +3,9 @@
 Defaults are sized for the sandbox (local[N], 128 GiB, parquet inputs) but
 every knob is chosen to also be the right *shape* at cluster scale:
 
-- AQE on (runtime re-planning, skew-join splitting, partition coalescing).
+- AQE on (runtime re-planning, skew-join splitting, partition coalescing):
+  the engine relies on all three, and all three are Spark's defaults, so
+  the session sets none of them; 128 MiB parquet splits are the default too.
 - Arrow enabled and batch-size-bounded (the extraction stage ships BINARY
   html blobs through Arrow; unbounded batches would OOM Python workers).
 - shuffle.partitions defaults to cores*2 locally; on a real cluster this is
@@ -113,9 +115,6 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # let AQE re-plan INSIDE cached plans too (default false): the dedup
         # suite caches its shared shingle index, and with the default every
         # consumer stage inherits the cache's full static shuffle partition
@@ -136,10 +135,6 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", driver_memory())
-        # parquet scans: 128 MB splits are the right granularity for both
-        # local[32] at sf0.1 and a 1000-executor cluster at 100 TB.
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.sql.shuffle.spill.compress", "true")
         # INT96 (the default) carries no parquet column statistics; the
         # sink's footer-based lineage needs min/max on the event-time column
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")

@@ -223,10 +223,13 @@ def test_sequence_packing_bounded_shard_key(spark):
 
 
 def test_quality_stratify_methods_agree(spark):
-    """The distributed-rank scale path and the literal ntile window assign
+    """The distributed-rank plan and the literal ntile window assign
     IDENTICAL buckets — including a language with fewer docs than buckets
     (ntile's q=0 edge)."""
+    from pyspark.sql import Window
+
     from maxx_spark.operators.corpus import quality_stratify
+    from maxx_spark.operators.text import quality_parts
 
     good = ("the cat and the dog is of a kind to all in the end, "
             "and the story is told in a calm way of the old land.")
@@ -245,8 +248,12 @@ def test_quality_stratify_methods_agree(spark):
     )
     docs = docs.unionByName(null_lang)
     key = lambda t: (t[0] is None, t[0] or "", t[1:])
-    ranked = sorted(map(tuple, quality_stratify(docs, method="ranked").collect()), key=key)
-    ntile = sorted(map(tuple, quality_stratify(docs, method="ntile").collect()), key=key)
+    ranked = sorted(map(tuple, quality_stratify(docs).collect()), key=key)
+    w = Window.partitionBy("lang").orderBy(F.col("quality").desc(), F.col("doc_id"))
+    ref = docs.select(
+        "lang", "doc_id", quality_parts(F.col("text"))["composite"].alias("quality")
+    ).select("lang", "doc_id", "quality", F.ntile(10).over(w).alias("bucket"))
+    ntile = sorted(map(tuple, ref.collect()), key=key)
     assert ranked == ntile
     assert sum(1 for t in ranked if t[0] is None) == 2  # null-lang rows kept
 

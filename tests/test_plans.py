@@ -300,7 +300,7 @@ def test_no_single_partition_windows_in_rank_consumers(spark, sf_dir):
     from maxx_spark.plans import executed_plan
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    # vocab_build and quality_stratify(ranked): no Window operator at all
+    # vocab_build and quality_stratify: no Window operator at all
     assert "Window" not in executed_plan(T.vocab_build(docs))
     assert "Window" not in executed_plan(C.quality_stratify(docs))
     # sequence_packing: windows remain, but every spec carries the shard key

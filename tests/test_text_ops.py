@@ -14,7 +14,7 @@ def _docs(spark, rows):
 
 
 def test_connected_components_chain_and_singleton(spark):
-    """A 4-node CHAIN (diameter 3 — needs multiple propagation rounds),
+    """A 4-node CHAIN (diameter 3),
     a separate pair, and an isolated pair; labels = component min."""
     from maxx_spark.operators.dedup import connected_components
 
@@ -28,7 +28,7 @@ def test_connected_components_chain_and_singleton(spark):
         7: (7, 2), 8: (7, 2),
     }
     # both solve paths must agree: driver-side union-find (small graphs)
-    # and the distributed min-label loop (forced via local_threshold=0)
+    # and the distributed star loop (forced via local_threshold=0)
     for thr in (100_000, 0):
         out = {r["doc_id"]: (r["cluster_id"], r["cluster_size"])
                for r in connected_components(pairs, local_threshold=thr).collect()}
@@ -50,15 +50,14 @@ def test_connected_components_reversed_chain(spark):
 
 
 def test_connected_components_star_variant(spark):
-    """The two distributed loops, called directly: star (large-star/
-    small-star) and propagation must (a) label ordinary graphs exactly as
-    union-find does — and so must connected_components' distributed path —
-    and (b) star must solve a long PATH, propagation's worst case where
-    rounds = diameter, within a round budget propagation provably blows."""
+    """The distributed star loop (large-star/small-star), called directly,
+    must (a) label ordinary graphs exactly as union-find does — and so must
+    connected_components' distributed path — and (b) solve a long PATH,
+    where rounds would equal the diameter for min-label propagation, in
+    O(log^2 n) rounds."""
     import random
 
     from maxx_spark.operators.dedup import (
-        _cc_propagation,
         _cc_star,
         _cc_unionfind_local,
         connected_components,
@@ -74,63 +73,45 @@ def test_connected_components_star_variant(spark):
     )
     uf = _cc_unionfind_local(pairs).collect()
     want = {r["doc_id"]: r["cluster_id"] for r in uf}
-    prop_labels, _, prop_conv = _cc_propagation(pairs, max_iters=20)
-    assert prop_conv
     star_labels, _ = _cc_star(pairs, max_iters=20)
-    for name, labels in (("propagation", prop_labels), ("star", star_labels)):
-        assert {r["doc_id"]: r["label"] for r in labels.collect()} == want, name
+    assert {r["doc_id"]: r["label"] for r in star_labels.collect()} == want
     got = connected_components(pairs, local_threshold=0).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, uf))
 
-    # 120-node path, min at the far end: diameter 119. In 8 rounds
-    # propagation moves the min label only ~8 hops (not converged); star
-    # collapses the whole path to one root and converges strictly early.
+    # clique through a canonical doc (the common dedup shape, diameter 2)
+    clique = spark.createDataFrame(
+        [(5, x) for x in (9, 23, 41)] + [(9, 23)], "doc_a long, doc_b long"
+    )
+    star_labels, _ = _cc_star(clique, max_iters=20)
+    want = {r["doc_id"]: r["cluster_id"] for r in _cc_unionfind_local(clique).collect()}
+    assert want == {5: 5, 9: 5, 23: 5, 41: 5}
+    assert {r["doc_id"]: r["label"] for r in star_labels.collect()} == want
+
+    # 120-node path, min at the far end: diameter 119. Star collapses the
+    # whole path to one root and converges strictly early.
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(119)], "doc_a long, doc_b long"
     )
     und = path.select(F.col("doc_a"), F.col("doc_b"))
-    prop_labels, prop_rounds, prop_conv = _cc_propagation(und, max_iters=8)
     star_labels, star_rounds = _cc_star(und, max_iters=12)
     star = {r["doc_id"]: r["label"] for r in star_labels.collect()}
     assert star == {i: 0 for i in range(120)}
     # O(log^2 n) contraction: 8 working rounds + 1 stationary confirm round
     assert star_rounds <= 9, star_rounds
-    assert prop_conv is False  # the signal auto escalates on
-    prop = {r["doc_id"]: r["label"] for r in prop_labels.collect()}
-    assert prop[119] != 0  # diameter-bound: propagation can't finish in 8
 
 
-def test_connected_components_auto_escalation(spark):
-    """The 'auto' selection rule: converge-in-K graphs never escalate
-    (propagation round count only); a diameter-119 path escalates after K
-    rounds and still lands the exact component min via the quotient-graph
-    star hand-off."""
-    from maxx_spark.operators.dedup import _cc_auto, _cc_propagation
+def test_connected_components_cap_raises(spark):
+    """A loop that hits its round cap mid-contraction raises instead of
+    returning partial labels: 3 rounds cannot settle a 120-node path."""
+    import pytest
 
-    # clique through a canonical doc (the common dedup shape, diameter 2):
-    # auto must stop inside the propagation budget — no escalation rounds
-    clique = spark.createDataFrame(
-        [(5, x) for x in (9, 23, 41)] + [(9, 23)], "doc_a long, doc_b long"
-    )
-    labels, rounds = _cc_auto(clique, max_iters=20, escalate_after=4)
-    assert rounds <= 4
-    assert {r["doc_id"]: r["label"] for r in labels.collect()} == {
-        5: 5, 9: 5, 23: 5, 41: 5,
-    }
+    from maxx_spark.operators.dedup import connected_components
 
-    # 120-node path, min at the end: propagation alone needs 119 rounds;
-    # auto runs K=4, hands the label-quotient chain to star, total rounds
-    # far below the diameter
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(119)], "doc_a long, doc_b long"
     )
-    labels, rounds = _cc_auto(path, max_iters=20, escalate_after=4)
-    got = {r["doc_id"]: r["label"] for r in labels.collect()}
-    assert got == {i: 0 for i in range(120)}
-    assert rounds < 119 // 2, rounds
-    # sanity: the same budget pure propagation provably cannot finish in
-    _, _, conv = _cc_propagation(path, max_iters=4)
-    assert conv is False
+    with pytest.raises(RuntimeError, match="max_iters=3"):
+        connected_components(path, max_iters=3, local_threshold=0).collect()
 
 
 def test_top_terms_tie_breaks(spark):

@@ -12,9 +12,10 @@ Usage: python tools/builtins_coverage.py
 Prints one JSON line; exits nonzero if overlap < 95%.
 """
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from maxx_spark.operators.builtins import all_builtin_names  # noqa: E402
 

@@ -12,9 +12,11 @@ whenever the extractor or generator changes:
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 HEADER = '''"""AUTO-GENERATED by tools/regen_golden.py — do not edit by hand.
 
@@ -105,7 +107,7 @@ def main() -> None:
         sql = values_sql(rows, cols, types)
         out.append(f"{name.upper()}_SQL = {sql!r}\n\n")
         print(f"{name}: {len(rows)} golden rows")
-    with open("/root/repo/maxx_spark/golden.py", "w") as f:
+    with open(os.path.join(REPO, "maxx_spark", "golden.py"), "w") as f:
         f.write("".join(out))
     spark.stop()
     print("wrote maxx_spark/golden.py")
