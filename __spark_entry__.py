@@ -582,17 +582,13 @@ def _q_point_lookup(s: SparkSession) -> DataFrame:
 
 
 def _q_glob(s: SparkSession) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from maxx_spark.gen import generate_pages_df
+    from maxx_spark.operators.codeunits import with_host
     from maxx_spark.operators.globber import glob_filter
 
     pages = generate_pages_df(s, n_projects=2, n_filler=50)
     inc = glob_filter(pages, "matlab/toolbox", recursive=True, parse_live_scripts=True)
-    return inc.select(
-        F.regexp_extract(F.col("url"), r"^[a-z]+://([^/]+)/", 1).alias("host"),
-        "url",
-    ).orderBy("host", "url")
+    return with_host(inc).select("host", "url").orderBy("host", "url")
 
 
 # (scope_path, name) request set for q35 — includes a name shadowed at two

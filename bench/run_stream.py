@@ -11,7 +11,10 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import time
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
@@ -31,7 +34,7 @@ def main() -> None:
         # default open-cost binning would collapse a 64-file micro-batch
         # into a handful of splits and cap parallelism
         .config("spark.sql.files.openCostInBytes", "134217728")
-        .config("spark.executorEnv.PYTHONPATH", "/root/repo")
+        .config("spark.executorEnv.PYTHONPATH", REPO)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.session.timeZone", "UTC")

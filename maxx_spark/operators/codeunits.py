@@ -2,17 +2,20 @@
 
 - shadowing_dedup: MATLAB path-precedence dedup per (host, identifier).
 - folder_rollup: directory aggregation with Contents.m docstring fallback.
-- resolve_bases / ancestor_closure / class_mro / inherited_members: the
-  batch inheritance pipeline — distributed iterate-to-fixpoint joins plus a
-  per-class C3 linearization in applyInPandas (each class's ancestor
-  subgraph is tiny; the grouping is by class, so mega-hosts don't skew it).
+- class_edges / class_mro / inherited_members: the batch inheritance
+  pipeline — resolved base edges carry their declaration position, the
+  engine's one connected-components solve (operators/dedup.py) labels each
+  inheritance component, and one applyInPandas group per component runs
+  C3 over its classes with bases in declaration order.
 - builtin doc-link join: broadcast dim-table join (P32).
 
-Scale notes: the closure iterates K times over an edges table hashed on
-(host, child) — each iteration is one shuffle of the *frontier* only;
-real-world class hierarchies converge in ≤5 iterations. Cycles are detected
-when a class reaches itself and are excluded (reference objects.py:815-820
-raises on the same condition).
+Scale notes: groups are inheritance components, never hosts, so a mega
+host spreads over as many groups as it has unrelated hierarchies, and a
+component is as large as one project's class tree. The components solve
+runs on the driver below its edge threshold and otherwise as the
+distributed star loop, which raises at its round cap. A class whose
+ancestors form a cycle (a self-base included) degrades to the MRO [cls]
+(reference objects.py:815-820 raises on the same condition).
 """
 
 from __future__ import annotations
@@ -26,6 +29,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from maxx_spark.operators.dedup import connected_components
 
 
 def with_host(units: DataFrame) -> DataFrame:
@@ -99,12 +104,16 @@ def folder_rollup(units: DataFrame) -> DataFrame:
 
 
 def class_edges(units: DataFrame) -> DataFrame:
-    """(host, cls, base) edges, bases resolved host-locally against known
-    unit paths — unresolvable bases (builtins like `handle`) drop out, as in
-    the reference's resolved_bases (objects.py:794-808)."""
+    """(host, cls, base, pos) edges, bases resolved host-locally against
+    known unit paths — unresolvable bases (builtins like `handle`) drop
+    out, as in the reference's resolved_bases (objects.py:794-808). ``pos``
+    is the base's declaration position (C3's local precedence order); a
+    class defined twice on one host keeps each base's minimum position."""
     u = with_host(units)
     classes = u.where(F.col("kind") == "class").select(
-        "host", F.col("unit_path").alias("cls"), F.explode("bases").alias("base_name")
+        "host",
+        F.col("unit_path").alias("cls"),
+        F.posexplode("bases").alias("pos", "base_name"),
     )
     defs = (
         u.where(F.col("kind") == "class")
@@ -117,55 +126,9 @@ def class_edges(units: DataFrame) -> DataFrame:
             defs,
             (classes.host == defs.d_host) & (classes.base_name == defs.base),
         )
-        .select("host", "cls", "base")
+        .groupBy("host", "cls", "base")
+        .agg(F.min("pos").alias("pos"))
     )
-
-
-def ancestor_closure(edges: DataFrame, max_depth: int = 16) -> DataFrame:
-    """Transitive closure (host, cls, ancestor, depth) by frontier joins.
-
-    Each iteration materializes the new frontier with an eager
-    localCheckpoint: the `isEmpty()` probe and every later consumer read
-    the stored blocks instead of replaying the join lineage, so iteration
-    K costs one frontier-sized join + anti-join — without this the K-th
-    frontier's lineage chains through all K-1 prior joins and the final
-    union replays the whole prefix per action (quadratic at real depth).
-    The closure itself is a union over checkpointed leaves, so it never
-    recomputes; edges are persisted for the loop and released at the end.
-    """
-    edges = edges.persist()
-    closure = (
-        edges.select("host", "cls", F.col("base").alias("ancestor"))
-        .withColumn("depth", F.lit(1))
-        .localCheckpoint(eager=True)
-    )
-    frontier = closure
-    for _ in range(max_depth - 1):
-        nxt = (
-            frontier.alias("f")
-            .join(
-                edges.alias("e"),
-                (F.col("f.host") == F.col("e.host"))
-                & (F.col("f.ancestor") == F.col("e.cls")),
-            )
-            .select(
-                F.col("f.host").alias("host"),
-                F.col("f.cls").alias("cls"),
-                F.col("e.base").alias("ancestor"),
-                (F.col("f.depth") + 1).alias("depth"),
-            )
-        )
-        new = nxt.join(
-            closure, ["host", "cls", "ancestor"], "left_anti"
-        )
-        # cycle guard: a class reaching itself stops expanding
-        new = new.where(F.col("cls") != F.col("ancestor")).localCheckpoint(eager=True)
-        if new.isEmpty():
-            break
-        closure = closure.unionByName(new)
-        frontier = new
-    edges.unpersist()
-    return closure
 
 
 def _c3_merge(seqs: list[list[str]]) -> list[str]:
@@ -209,59 +172,45 @@ MRO_SCHEMA = StructType(
 
 
 def class_mro(units: DataFrame) -> DataFrame:
-    """Exact C3 MRO per class: gather each class's ancestor subgraph (edges
-    restricted to its closure) and linearize per class group. Distribution
-    is by (host, cls) — hierarchies are tiny, so groups are tiny."""
+    """Exact C3 MRO per class, linearized per inheritance component: the
+    base edges go through connected_components on the node key host/cls,
+    and one applyInPandas group per component linearizes all of its
+    classes. A class with no edge is its own component."""
+
+    def node(col: str):  # unique: with_host never yields a host containing '/'
+        return F.concat("host", F.lit("/"), col)
+
     edges = class_edges(units)
-    closure = ancestor_closure(edges)
-    # subgraph edges for each class: edges whose child is the class itself
-    # or any of its ancestors
-    members_of = closure.select("host", "cls", "ancestor").unionByName(
-        closure.select("host", "cls", F.col("cls").alias("ancestor")).distinct()
+    comps = connected_components(edges.select(node("cls"), node("base"))).select(
+        F.col("doc_id").alias("node"), F.col("cluster_id").alias("component")
     )
-    sub = (
-        members_of.alias("m")
-        .join(
-            edges.alias("e"),
-            (F.col("m.host") == F.col("e.host")) & (F.col("m.ancestor") == F.col("e.cls")),
-        )
-        .select(
-            F.col("m.host").alias("host"),
-            F.col("m.cls").alias("cls"),
-            F.col("e.cls").alias("child"),
-            F.col("e.base").alias("parent"),
-        )
-        .distinct()
-    )
-    # classes with no resolvable bases still get a trivial MRO
-    all_classes = with_host(units).where(F.col("kind") == "class").select(
+    classes = with_host(units).where(F.col("kind") == "class").select(
         "host", F.col("unit_path").alias("cls")
     ).distinct()
-    sub = all_classes.join(sub, ["host", "cls"], "left")
+    rows = (
+        classes.join(edges, ["host", "cls"], "left")
+        .withColumn("node", node("cls"))
+        .join(comps, "node", "left")
+        .withColumn("component", F.coalesce("component", "node"))
+    )
 
-    def linearize(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        host, cls = key
+    def linearize(pdf: pd.DataFrame) -> pd.DataFrame:
         parents: dict[str, list[str]] = {}
-        for child, parent in zip(pdf["child"], pdf["parent"]):
-            if child is None or parent is None:
-                continue
-            parents.setdefault(child, [])
-            if parent not in parents[child]:
-                parents[child].append(parent)
-        try:
-            order = _c3_linearize(cls, parents)
-        except ValueError:
-            order = [cls]  # cycle / inconsistency → degrade to self
-        return pd.DataFrame(
-            {
-                "host": host,
-                "cls": cls,
-                "mro_pos": range(len(order)),
-                "ancestor": order,
-            }
-        )
+        declared = pdf.dropna(subset=["base"]).sort_values(["pos", "base"])
+        for cls, base in zip(declared["cls"], declared["base"]):
+            parents.setdefault(cls, []).append(base)
+        out = []
+        for cls in pdf["cls"].unique():
+            try:
+                order = _c3_linearize(cls, parents)
+            except ValueError:
+                order = [cls]  # cycle / inconsistency → degrade to self
+            out += [(cls, pos, anc) for pos, anc in enumerate(order)]
+        mro = pd.DataFrame(out, columns=["cls", "mro_pos", "ancestor"])
+        mro.insert(0, "host", pdf["host"].iloc[0])
+        return mro
 
-    return sub.groupBy("host", "cls").applyInPandas(linearize, MRO_SCHEMA)
+    return rows.groupBy("component").applyInPandas(linearize, MRO_SCHEMA)
 
 
 def inherited_members(units: DataFrame) -> DataFrame:

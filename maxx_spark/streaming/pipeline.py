@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from maxx_spark.extract import extract_code_units
+from maxx_spark.operators.codeunits import with_host
 from maxx_spark.streaming.sink import ExactlyOnceParquetSink
 from maxx_spark.streaming.source import pages_stream
 
@@ -57,10 +58,6 @@ def extraction_query(
     return q, sink
 
 
-def host_expr():
-    return F.regexp_extract(F.col("url"), r"^[a-z]+://([^/]+)/", 1).alias("host")
-
-
 def windowed_unit_counts(
     pages: DataFrame,
     delay: str = "10 minutes",
@@ -75,7 +72,7 @@ def windowed_unit_counts(
     win = F.window("warc_ts", size, slide) if slide else F.window("warc_ts", size)
     return (
         units.withWatermark("warc_ts", delay)
-        .withColumn("host", host_expr())
+        .transform(with_host)
         .groupBy(win.alias("w"), "host")
         .agg(F.count(F.lit(1)).alias("n_units"))
         .select(F.col("w.start").alias("window_start"), "host", "n_units")
@@ -88,7 +85,7 @@ def session_unit_counts(pages: DataFrame, delay: str = "10 minutes", gap: str = 
     units = extract_code_units(pages)
     return (
         units.withWatermark("warc_ts", delay)
-        .withColumn("host", host_expr())
+        .transform(with_host)
         .groupBy(F.session_window("warc_ts", gap).alias("w"), "host")
         .agg(F.count(F.lit(1)).alias("n_units"))
         .select(
@@ -111,7 +108,7 @@ def salted_host_counts(pages: DataFrame, delay: str = "10 minutes", n_salt: int 
     salt = (F.hash("url") % n_salt + n_salt) % n_salt
     partial = (
         pages.withWatermark("warc_ts", delay)
-        .withColumn("host", host_expr())
+        .transform(with_host)
         .withColumn("__salt", salt)
         .groupBy(F.window("warc_ts", "5 minutes").alias("w"), "host", "__salt")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -147,6 +144,6 @@ def dedup_units_stream(pages: DataFrame, delay: str = "10 minutes") -> DataFrame
     units = extract_code_units(pages)
     return (
         units.withWatermark("warc_ts", delay)
-        .withColumn("host", host_expr())
+        .transform(with_host)
         .dropDuplicatesWithinWatermark(["host", "unit_path", "kind"])
     )

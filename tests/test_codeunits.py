@@ -8,7 +8,6 @@ from maxx_spark.extract import extract_code_units
 from maxx_spark.gen import generate_pages_df
 from maxx_spark.operators.codeunits import (
     _c3_linearize,
-    ancestor_closure,
     builtins_df,
     class_edges,
     class_mro,
@@ -50,18 +49,13 @@ def test_shadowing_dedup(units):
     assert all("/subdir/" not in r["url"] for r in acc)
 
 
-def test_class_edges_and_closure(units):
+def test_class_edges(units):
     e = class_edges(units)
     pairs = {(r["cls"], r["base"]) for r in e.collect()}
     assert ("FancyTracker", "Tracker") in pairs
     assert ("TurboTracker", "FancyTracker") in pairs
     # `handle` / `int8` are builtins — not resolvable as local classes
     assert not any(b in ("handle", "int8") for _, b in pairs)
-
-    c = ancestor_closure(e)
-    anc = {(r["cls"], r["ancestor"], r["depth"]) for r in c.collect()}
-    assert ("TurboTracker", "FancyTracker", 1) in anc
-    assert ("TurboTracker", "Tracker", 2) in anc
 
 
 def test_class_mro(units):
@@ -73,6 +67,67 @@ def test_class_mro(units):
     # a base-less class still has a trivial MRO
     lone = mro.where(F.col("cls") == "metrics.Gauge").collect()
     assert lone and all(r["ancestor"] == "metrics.Gauge" for r in lone)
+
+
+_CLASS_UNITS = "url string, unit_path string, kind string, bases array<string>"
+
+
+def _mro_of(spark, decls):
+    """class_mro over one host's classdefs, given as (cls, [bases]) in
+    declaration order → {cls: [ancestor, ...] in mro_pos order}."""
+    units = spark.createDataFrame(
+        [(f"https://h.example.com/tb/{c}.m", c, "class", bases) for c, bases in decls],
+        _CLASS_UNITS,
+    )
+    out: dict[str, list] = {}
+    for r in class_mro(units).orderBy("cls", "mro_pos").collect():
+        assert r["host"] == "h.example.com"
+        out.setdefault(r["cls"], []).append(r["ancestor"])
+    return out
+
+
+def test_class_mro_deep_chain(spark):
+    """A 21-class single-inheritance chain: every class gets its full
+    ancestry, however deep — there is no depth cap to truncate it."""
+    n = 21
+    mro = _mro_of(spark, [(f"C{i}", [f"C{i + 1}"] if i + 1 < n else []) for i in range(n)])
+    assert mro == {f"C{i}": [f"C{j}" for j in range(i, n)] for i in range(n)}
+
+
+def test_class_mro_local_precedence(spark):
+    """C3 keeps each class's declared base order: `D < B & C` and
+    `D < C & B` over the same diamond give the two different orders."""
+    diamond = [("A", []), ("B", ["A"]), ("C", ["A"])]
+    assert _mro_of(spark, diamond + [("D", ["B", "C"])])["D"] == ["D", "B", "C", "A"]
+    assert _mro_of(spark, diamond + [("D", ["C", "B"])])["D"] == ["D", "C", "B", "A"]
+
+
+def test_class_mro_cycles_degrade(spark):
+    """A class whose ancestors form a cycle degrades to [cls]: an A<->B
+    cycle, a self-base, a class below a cycle, and a 21-class ring; classes
+    beside them in the same component keep their real MRO."""
+    ring = [(f"R{i}", [f"R{(i + 1) % 21}"]) for i in range(21)]
+    mro = _mro_of(
+        spark,
+        [("A", ["B"]), ("B", ["A"]), ("S", ["S"]), ("C", ["A", "X"]), ("X", []), ("Y", ["X"])]
+        + ring,
+    )
+    for cls in ["A", "B", "S", "C"] + [c for c, _ in ring]:
+        assert mro[cls] == [cls], cls
+    assert mro["X"] == ["X"] and mro["Y"] == ["Y", "X"]
+
+
+def test_class_mro_without_resolvable_bases(spark):
+    """No class has a local base (builtins and undefined names only): no
+    edge reaches the components solve, and each class gets one trivial
+    row. The grouped-map function takes the group frame alone, so building
+    the plan raises no eval-type UserWarning."""
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        mro = _mro_of(spark, [("P", ["handle"]), ("Q", []), ("R", ["Missing", "int8"])])
+    assert mro == {"P": ["P"], "Q": ["Q"], "R": ["R"]}
 
 
 def test_inherited_members(units):
@@ -123,33 +178,12 @@ def test_builtin_link(spark, units):
 
 
 def test_mro_plan_is_distributed(units):
-    """The MRO computation must not collect to the driver: its plan contains
-    FlatMapGroupsInPandas (distributed applyInPandas), and the closure is a
-    bounded iterative join."""
+    """The MRO linearization must not collect to the driver: its plan
+    contains FlatMapGroupsInPandas (one distributed applyInPandas group per
+    inheritance component, the labels coming from connected_components)."""
     mro = class_mro(units)
     plan = mro._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan
-
-
-def test_ancestor_closure_deep_chain(spark):
-    """Depth-12 chain converges with per-iteration checkpointing: the K-th
-    frontier must not replay the whole join prefix (VERDICT r1 flagged the
-    unpersisted loop), and the result is the exact transitive closure."""
-    depth = 12
-    rows = [("h", f"C{i}", f"C{i+1}") for i in range(depth)]
-    edges = spark.createDataFrame(rows, "host string, cls string, base string")
-    c = ancestor_closure(edges)
-    got = {(r["cls"], r["ancestor"], r["depth"]) for r in c.collect()}
-    want = {
-        (f"C{i}", f"C{j}", j - i) for i in range(depth) for j in range(i + 1, depth + 1)
-    }
-    assert got == want
-    # cycle: A->B->A must terminate and never emit self-ancestry
-    cyc = spark.createDataFrame(
-        [("h", "A", "B"), ("h", "B", "A")], "host string, cls string, base string"
-    )
-    cc = {(r["cls"], r["ancestor"]) for r in ancestor_closure(cyc).collect()}
-    assert cc == {("A", "B"), ("B", "A")}
 
 
 def test_resolve_in_scope(spark, units):

@@ -15,24 +15,33 @@ def _docs(spark, rows):
 
 def test_connected_components_chain_and_singleton(spark):
     """A 4-node CHAIN (diameter 3),
-    a separate pair, and an isolated pair; labels = component min."""
+    a separate pair, and an isolated pair; labels = component min. The
+    same graph with string keys ("host/cls", as class_mro passes them)
+    labels with the string min."""
     from maxx_spark.operators.dedup import connected_components
 
-    pairs = spark.createDataFrame(
-        [(10, 20), (20, 30), (30, 40), (100, 200), (7, 8)],
-        "doc_a long, doc_b long",
-    )
+    edges = [(10, 20), (20, 30), (30, 40), (100, 200), (7, 8)]
     expect = {
         10: (10, 4), 20: (10, 4), 30: (10, 4), 40: (10, 4),
         100: (100, 2), 200: (100, 2),
         7: (7, 2), 8: (7, 2),
     }
+    inputs = [
+        (spark.createDataFrame(edges, "doc_a long, doc_b long"), expect),
+        (
+            spark.createDataFrame(
+                [(f"h/{a}", f"h/{b}") for a, b in edges], "doc_a string, doc_b string"
+            ),
+            {f"h/{k}": (f"h/{c}", n) for k, (c, n) in expect.items()},
+        ),
+    ]
     # both solve paths must agree: driver-side union-find (small graphs)
     # and the distributed star loop (forced via local_threshold=0)
-    for thr in (100_000, 0):
-        out = {r["doc_id"]: (r["cluster_id"], r["cluster_size"])
-               for r in connected_components(pairs, local_threshold=thr).collect()}
-        assert out == expect, thr
+    for pairs, want in inputs:
+        for thr in (100_000, 0):
+            out = {r["doc_id"]: (r["cluster_id"], r["cluster_size"])
+                   for r in connected_components(pairs, local_threshold=thr).collect()}
+            assert out == want, (pairs.schema[0].dataType, thr)
 
 
 def test_connected_components_reversed_chain(spark):
