@@ -31,51 +31,55 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from maxx_spark.operators.dedup import md5i
+from maxx_spark.operators.dedup import canonical_ids, md5i
 from maxx_spark.operators.ranking import range_ranked
-from maxx_spark.operators.text import quality_parts
+from maxx_spark.operators.text import fp_normalized, quality_parts, word_tokens
 
-# Aggressive content normalization (same as text.fingerprint): split
-# assignment must be CONTENT-based so byte-level near-identical docs (e.g.
-# whitespace variants) land in the same split — splitting on doc_id leaks
-# duplicated content across train/test.
-def _fp_norm(text):
-    return F.trim(F.regexp_replace(F.regexp_replace(F.lower(text), r"[^a-z0-9]+", " "), r"\s+", " "))
-
-
-def _n_tok(text=None):
-    """The engine's regex word-token count (BPE-ish pre-tokenizer split) —
-    ONE definition shared by packing / mixture / sharding so the counts can
-    never silently diverge; each consumer's oracle mirrors it verbatim."""
-    c = F.col("text") if text is None else text
-    return F.size(F.regexp_extract_all(F.lower(c), F.lit(r"[a-z0-9]+"), 0)).cast("long")
+# content-hash split: buckets below TRAIN_PCT train, the next VAL_PCT val
+TRAIN_PCT = 90
+VAL_PCT = 5
+# quality gate: minimum text.quality_parts composite (0..4) a doc keeps
+MIN_QUALITY = 3
 
 
-def split_cols(train_pct: int = 90, val_pct: int = 5):
+def _n_tok():
+    """``text.word_tokens`` of the text column as long — the count packing,
+    mixture and sharding sum; each consumer's oracle mirrors it verbatim."""
+    return word_tokens(F.col("text")).cast("long")
+
+
+def quality_gated(docs: DataFrame) -> DataFrame:
+    """docs whose quality composite is at least ``MIN_QUALITY``."""
+    return docs.where(quality_parts(F.col("text"))["composite"] >= F.lit(MIN_QUALITY))
+
+
+def split_cols():
     """(bucket, split) column pair of the content-hash split contract —
-    shared by hash_split (q46) and the streaming/batch ingest (q54) so the
-    thresholds and the fingerprint norm change in exactly one place."""
-    bucket = (md5i(_fp_norm(F.col("text"))) % 100).alias("bucket")
+    shared by hash_split (q46), training_pipeline (q59) and the ingest
+    (q54). Content-keyed on ``fp_normalized`` text so byte-level
+    near-identical docs land in the same split: splitting on doc_id leaks
+    duplicated content across train/test."""
+    bucket = (md5i(fp_normalized(F.col("text"))) % 100).alias("bucket")
     split = (
-        F.when(F.col("bucket") < train_pct, F.lit("train"))
-        .when(F.col("bucket") < train_pct + val_pct, F.lit("val"))
+        F.when(F.col("bucket") < TRAIN_PCT, F.lit("train"))
+        .when(F.col("bucket") < TRAIN_PCT + VAL_PCT, F.lit("val"))
         .otherwise(F.lit("test"))
         .alias("split")
     )
     return bucket, split
 
 
-def hash_split(documents: DataFrame, train_pct: int = 90, val_pct: int = 5) -> DataFrame:
+def hash_split(documents: DataFrame) -> DataFrame:
     """Deterministic train/val/test assignment by content hash.
 
     bucket = md5i(normalized text) mod 100; split = train below
-    ``train_pct``, val below ``train_pct+val_pct``, else test. Stable under
+    ``TRAIN_PCT``, val below ``TRAIN_PCT+VAL_PCT``, else test. Stable under
     corpus growth (a doc's split never changes when other docs are added),
     reproducible across engines (md5-prefix integer hash), and content-keyed
     so exact dupes can't straddle the eval boundary. Pure projection —
     whole-stage-codegen, no shuffle, linear at any scale.
     """
-    bucket, split = split_cols(train_pct, val_pct)
+    bucket, split = split_cols()
     return documents.select("doc_id", bucket).select("doc_id", "bucket", split).orderBy("doc_id")
 
 
@@ -252,7 +256,7 @@ def shard_assignment(documents: DataFrame, n_shards: int = 16) -> DataFrame:
     groupBy(shard) — the global share stage runs over n_shards rows only.
     """
     n_tok = _n_tok()
-    shard = (md5i(_fp_norm(F.col("text"))) % n_shards).cast("int")
+    shard = (md5i(fp_normalized(F.col("text"))) % n_shards).cast("int")
     per = (
         documents.select(shard.alias("shard"), n_tok.alias("t"))
         .groupBy("shard")
@@ -270,47 +274,24 @@ def shard_assignment(documents: DataFrame, n_shards: int = 16) -> DataFrame:
     )
 
 
-def training_pipeline(
-    documents: DataFrame,
-    min_quality: int = 3,
-    train_pct: int = 90,
-    val_pct: int = 5,
-    budget: int = 256,
-    shard_size: int = 256,
-) -> DataFrame:
+def training_pipeline(documents: DataFrame) -> DataFrame:
     """The full dataset-assembly chain a user actually runs, composed as
-    ONE declarative plan: quality gate (composite >= ``min_quality``) →
-    exact content dedup (keep the min-doc_id canonical per normalized
-    text) → train-split selection (content hash) → sequence packing of the
-    survivors.
+    ONE declarative plan: quality gate (``quality_gated``) → exact content
+    dedup (``dedup.canonical_ids``) → train-split selection (content hash)
+    → sequence packing of the survivors.
 
     Exists for two reasons. Semantically it pins the COMPOSED contract
     (offsets are computed over the post-filter survivor stream, so any
     reordering of the stages would change the output — the oracle checks
     the whole chain). Physically it demonstrates the operators fuse:
-    Catalyst plans the gate + dedup-window + split filters and the packing
-    windows in one job with no materialization barrier, and the scan reads
-    each document once.
+    Catalyst plans the gate + dedup rollup + split filters and the packing
+    windows as one plan with no materialization barrier.
     """
-    from maxx_spark.operators.dedup import normalized
-
-    q = quality_parts(F.col("text"))["composite"]
-    gated = documents.where(q >= min_quality)
-    # canonical dedup as a SLIM rollup + doc_id semi-join, never a window
-    # on the content hash: a viral duplicate (the very thing dedup exists
-    # for) would funnel every full-text copy into one window partition,
-    # while the (hash, min doc_id) agg combines map-side and the join back
-    # runs on uniform doc_id keys — full text crosses the wire once
-    canon_ids = (
-        gated.select(F.md5(normalized(F.col("text"))).alias("__h"), "doc_id")
-        .groupBy("__h")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    surv = gated.join(canon_ids, "doc_id", "semi")
-    bucket, split = split_cols(train_pct, val_pct)
-    train = surv.withColumn("__b", bucket.cast("long")).where(F.col("__b") < train_pct).drop("__b")
-    return sequence_packing(train, budget=budget, shard_size=shard_size)
+    gated = quality_gated(documents)
+    surv = gated.join(canonical_ids(gated), "doc_id", "semi")
+    bucket, _ = split_cols()
+    train = surv.withColumn("__b", bucket.cast("long")).where(F.col("__b") < TRAIN_PCT).drop("__b")
+    return sequence_packing(train)
 
 
 def quality_stratify(documents: DataFrame, n_buckets: int = 10) -> DataFrame:

@@ -42,12 +42,39 @@ def normalized(col):
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
+def words(col):
+    """The normalized word split every word-level operator tokenizes with."""
+    return F.split(normalized(col), " ")
+
+
+def text_hash(col):
+    """Content key of exact dedup: md5 of the normalized text."""
+    return F.md5(normalized(col))
+
+
+def canonical_ids(docs: DataFrame) -> DataFrame:
+    """doc_id of the canonical copy (min doc_id) per ``text_hash`` of docs.
+
+    A slim rollup for a doc_id semi-join, never a window on the content
+    hash: a viral duplicate (the very thing dedup exists for) would funnel
+    every full-text copy into one window partition, and AQE can split
+    skewed join partitions but never window partitions. The (hash, min
+    doc_id) agg combines map-side, and the join back runs on uniform
+    doc_id keys, so full text crosses the wire once."""
+    return (
+        docs.select("doc_id", text_hash(F.col("text")).alias("text_hash"))
+        .groupBy("text_hash")
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
+    )
+
+
 def exact_dedup(documents: DataFrame) -> DataFrame:
     """Exact dedup: canonical representative (min doc_id) per distinct
     normalized text. groupBy on md5 → uniform key distribution, map-side
     combine, no skew."""
     return (
-        documents.withColumn("text_hash", F.md5(normalized(F.col("text"))))
+        documents.withColumn("text_hash", text_hash(F.col("text")))
         .groupBy("text_hash")
         .agg(
             F.min("doc_id").alias("canonical_doc_id"),
@@ -71,7 +98,7 @@ def _word_ngrams(documents: DataFrame, n: int, wrap) -> DataFrame:
     shuffle the whole exploded index, the single largest intermediate in
     the dedup pipeline.
     """
-    d = documents.select("doc_id", F.split(normalized(F.col("text")), " ").alias("__w"))
+    d = documents.select("doc_id", words(F.col("text")).alias("__w"))
     w = F.col("__w")
     # guard: Spark sequence(0, -1) yields a *descending* [0,-1], so short
     # texts must map to an empty index array explicitly
@@ -496,7 +523,7 @@ def segment_dedup(documents: DataFrame, k: int = 10, salts: int = 32) -> DataFra
     skew-join splitting (on by Spark default); size ``salts`` ≈ target
     parallelism for the 100 TB shape.
     """
-    d = documents.select("doc_id", F.split(normalized(F.col("text")), " ").alias("__w"))
+    d = documents.select("doc_id", words(F.col("text")).alias("__w"))
     w = F.col("__w")
     n_seg = F.floor(F.size(w) / F.lit(k)).cast("int")
     idx = F.when(n_seg >= 1, F.sequence(F.lit(0), n_seg - 1)).otherwise(
@@ -595,7 +622,7 @@ def simhash32(documents: DataFrame) -> DataFrame:
     agg); the per-bit sums combine map-side.
     """
     toks = documents.select(
-        "doc_id", F.explode(F.split(normalized(F.col("text")), " ")).alias("tok")
+        "doc_id", F.explode(words(F.col("text"))).alias("tok")
     )
     toks = toks.withColumn("h", md5i(F.col("tok")) % F.lit(1 << 32))
     bit_sums = [

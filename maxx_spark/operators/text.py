@@ -1,18 +1,31 @@
 """Text-analysis operators over the documents table: language ID, quality
-scoring, token counting, fingerprinting.
+scoring, token counting, fingerprinting, and the composed corpus filter.
 
-All pure built-in column expressions — no Python in the hot path, every
-operator whole-stage-codegen eligible, trivially linear-scalable (no
-shuffle at all except the final optional orderBy for display).
+Most operators are built-in column expressions, whole-stage-codegen
+eligible. Two run an Arrow pandas UDF, because Catalyst's interpreted
+higher-order lambdas cost ~2 ms/doc for per-row n-gram work: ``_rep_stats``
+(q39 repetition_rules, q41 corpus_filter) and ``rolling_fingerprint`` (q19).
+The per-document projections are shuffle-free; the rollups (source health,
+top terms, vocabulary, lexical diversity, histograms, the corpus filter's
+canonical-copy rollup) shuffle on their group keys.
+
+Each text rule has one engine definition: ``fp_normalized`` (the oracle's
+FPNORM fragment), ``word_tokens``, the Gopher keep rule (``REP_MAX``,
+``_rep_keep``) and the stopword language rule (``_lang_ratios``,
+``_lang_pred``) here; ``normalized``/``words``/``text_hash`` (NORM) and
+``canonical_ids`` in operators/dedup.py.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 import pandas as pd  # module-level: pandas_udf type-hint resolution needs it
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from maxx_spark.operators.dedup import normalized
+from maxx_spark.operators.dedup import canonical_ids, normalized, words
 from maxx_spark.operators.ranking import range_ranked
 
 # Tiny per-language stopword marker sets for the n-gram/stopword heuristic.
@@ -25,32 +38,63 @@ STOPWORDS = {
 }
 
 
-def _tok(col):
-    return F.split(normalized(col), " ")
+# Gopher repetition/format thresholds (Rae et al. 2021, app. A1.1): the
+# largest value of each _rep_stats field a kept document may have.
+REP_MAX = {
+    "dup_line_frac": 0.30,
+    "dup_3gram_frac": 0.50,
+    "symbol_ratio": 0.10,
+    "bullet_frac": 0.90,
+}
+
+
+def fp_normalized(col):
+    """Aggressive fingerprint normalization: lower, non-alnum → space,
+    collapse, trim. Byte-level near-identical docs (whitespace or
+    punctuation variants) share it, so content keys built on it (split,
+    shard, fingerprint) never tell them apart."""
+    return F.trim(F.regexp_replace(F.regexp_replace(F.lower(col), r"[^a-z0-9]+", " "), r"\s+", " "))
+
+
+def word_tokens(col):
+    """Regex word-token count ([a-z0-9]+ over the lowered text — a BPE-ish
+    pre-tokenizer split), int."""
+    return F.size(F.regexp_extract_all(F.lower(col), F.lit(r"[a-z0-9]+"), 0))
+
+
+def _lang_ratios(text):
+    """{lang: share of the text's words in that language's STOPWORDS set}."""
+    toks = words(text)
+    n = F.greatest(F.size(toks), F.lit(1))
+    return {
+        lang: F.size(F.filter(toks, lambda t: t.isin(*sw))).cast("double") / n.cast("double")
+        for lang, sw in STOPWORDS.items()
+    }
+
+
+def _lang_pred(ratios):
+    """Predicted language from ``_lang_ratios``: the argmax language if its
+    ratio >= 0.02, else 'und'; ties break by language code order."""
+    langs = sorted(STOPWORDS)
+    best = F.greatest(*[ratios[k] for k in langs])
+    pred = F.lit("und")
+    for k in reversed(langs):  # earlier codes win ties → apply in reverse
+        pred = F.when((ratios[k] >= 0.02) & (ratios[k] == best), F.lit(k)).otherwise(pred)
+    return pred
 
 
 def lang_id(documents: DataFrame) -> DataFrame:
-    """Stopword-ratio language ID: for each language, ratio of tokens in its
-    marker set; predict argmax language if its ratio >= 0.02 else 'und'.
-    Ties break by language code order (deterministic)."""
-    toks = _tok(F.col("text"))
-    n = F.greatest(F.size(toks), F.lit(1))
-    cols = {}
-    for lang, words in STOPWORDS.items():
-        hits = F.size(F.filter(toks, lambda t: t.isin(*words)))
-        cols[lang] = (hits.cast("double") / n.cast("double"))
-    df = documents.select("doc_id", "lang", *[v.alias(f"r_{k}") for k, v in cols.items()])
-    langs = sorted(STOPWORDS)
-    best_ratio = F.greatest(*[F.col(f"r_{k}") for k in langs])
-    pred = F.lit("und")
-    for k in reversed(langs):  # earlier codes win ties → apply in reverse
-        pred = F.when((F.col(f"r_{k}") >= 0.02) & (F.col(f"r_{k}") == best_ratio), F.lit(k)).otherwise(pred)
+    """Stopword-ratio language ID (``_lang_pred``) with each document's best
+    ratio."""
+    ratios = _lang_ratios(F.col("text"))
+    df = documents.select("doc_id", "lang", *[v.alias(f"r_{k}") for k, v in ratios.items()])
+    r = {k: F.col(f"r_{k}") for k in ratios}
     return (
         df.select(
             "doc_id",
             F.col("lang").alias("declared_lang"),
-            pred.alias("pred_lang"),
-            F.round(best_ratio, 6).alias("best_ratio"),
+            _lang_pred(r).alias("pred_lang"),
+            F.round(F.greatest(*[r[k] for k in sorted(STOPWORDS)]), 6).alias("best_ratio"),
         )
         .orderBy("doc_id")
     )
@@ -60,7 +104,7 @@ def quality_parts(text):
     """Shared quality components over a text column — returned as a dict of
     Columns so quality_score / source_quality / quality_stratify compute the
     SAME expressions (one definition, three oracles mirror it)."""
-    toks = _tok(text)
+    toks = words(text)
     n_tok = F.size(toks)
     n_char = F.length(text)
     n_alpha = F.length(F.regexp_replace(text, r"[^A-Za-z]", ""))
@@ -112,18 +156,17 @@ def token_counts(documents: DataFrame) -> DataFrame:
     ([a-z0-9]+ over the lowered text — a BPE-ish pre-tokenizer split)."""
     text = F.col("text")
     ws = F.size(F.split(F.trim(text), r"\s+"))
-    wordish = F.size(F.regexp_extract_all(F.lower(text), F.lit(r"[a-z0-9]+"), 0))
     return documents.select(
         "doc_id",
         ws.alias("ws_tokens"),
-        wordish.alias("word_tokens"),
+        word_tokens(text).alias("word_tokens"),
     ).orderBy("doc_id")
 
 
 def fingerprint(documents: DataFrame) -> DataFrame:
-    """Document fingerprint: md5 of aggressively normalized text (lower,
-    non-alnum → space, collapse, trim) — canonical near-exact-dup key."""
-    norm = F.trim(F.regexp_replace(F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9]+", " "), r"\s+", " "))
+    """Document fingerprint: md5 of ``fp_normalized`` text — canonical
+    near-exact-dup key."""
+    norm = fp_normalized(F.col("text"))
     return documents.select(
         "doc_id",
         F.md5(norm).alias("fp_md5"),
@@ -131,13 +174,7 @@ def fingerprint(documents: DataFrame) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def repetition_rules(
-    documents: DataFrame,
-    max_dup_line: float = 0.30,
-    max_dup_3gram: float = 0.50,
-    max_symbol: float = 0.10,
-    max_bullet: float = 0.90,
-) -> DataFrame:
+def repetition_rules(documents: DataFrame) -> DataFrame:
     """Gopher-style repetition / format quality rules (Rae et al. 2021,
     'Scaling Language Models', app. A1.1 — public filter heuristics used in
     web-text pipelines):
@@ -146,7 +183,7 @@ def repetition_rules(
     - dup_3gram_frac: fraction of word 3-grams that are repeats;
     - symbol_ratio: '#'/'@'/braces chars per character;
     - bullet_frac: fraction of lines starting with a bullet;
-    - keep: all thresholds pass.
+    - keep: every stat is at most its ``REP_MAX`` threshold.
 
     Implementation: ONE Arrow-batched pandas UDF computing all five stats
     per document — the pure-built-in formulation (transform over an index
@@ -158,12 +195,6 @@ def repetition_rules(
     (\\s = [ \\t\\n\\x0b\\f\\r], trim = spaces only), so the SQL oracle
     matches bit-for-bit."""
     stats = _rep_stats(F.col("text"))
-    keep = (
-        (F.col("s.dup_line_frac") <= max_dup_line)
-        & (F.col("s.dup_3gram_frac") <= max_dup_3gram)
-        & (F.col("s.symbol_ratio") <= max_symbol)
-        & (F.col("s.bullet_frac") <= max_bullet)
-    )
     return (
         documents.select("doc_id", stats.alias("s"))
         .select(
@@ -172,10 +203,15 @@ def repetition_rules(
             F.round(F.col("s.dup_3gram_frac"), 6).alias("dup_3gram_frac"),
             F.round(F.col("s.symbol_ratio"), 6).alias("symbol_ratio"),
             F.round(F.col("s.bullet_frac"), 6).alias("bullet_frac"),
-            keep.alias("keep"),
+            _rep_keep("s").alias("keep"),
         )
         .orderBy("doc_id")
     )
+
+
+def _rep_keep(s):
+    """Gopher keep rule over the ``_rep_stats`` struct column named ``s``."""
+    return reduce(operator.and_, [F.col(f"{s}.{k}") <= v for k, v in REP_MAX.items()])
 
 
 _SYMBOLS = set("#@{}[]<>")
@@ -223,70 +259,28 @@ def _rep_stats(text_col):
     return stats(text_col)
 
 
-def _lang_pred_expr():
-    """(pred_lang expr over text) — shared by lang_id and corpus_filter."""
-    toks = _tok(F.col("text"))
-    n = F.greatest(F.size(toks), F.lit(1))
-    ratios = {}
-    for lang, words in STOPWORDS.items():
-        hits = F.size(F.filter(toks, lambda t: t.isin(*words)))
-        ratios[lang] = hits.cast("double") / n.cast("double")
-    langs = sorted(STOPWORDS)
-    best = F.greatest(*[ratios[k] for k in langs])
-    pred = F.lit("und")
-    for k in reversed(langs):  # earlier codes win ties → apply in reverse
-        pred = F.when((ratios[k] >= 0.02) & (ratios[k] == best), F.lit(k)).otherwise(pred)
-    return pred
-
-
 def corpus_filter(documents: DataFrame) -> DataFrame:
     """The composed training-data pipeline over documents: a doc survives
     iff (1) it passes the Gopher repetition/format rules, (2) it is the
-    canonical copy in exact dedup (min doc_id per normalized-text hash),
-    and (3) its declared language matches the stopword language ID (or the
-    ID abstains with 'und').
+    canonical copy in exact dedup (``dedup.canonical_ids``), and (3) its
+    declared language matches the stopword language ID (or the ID abstains
+    with 'und').
 
     The rules and lang-ID are evaluated on ONE scan projection (joining
     the individual operators' outputs would recompute the text-heavy
-    branches once per join subtree). Canonical-copy detection is a slim
-    (hash, min doc_id) rollup + a semi-join back on doc_id — and
-    critically neither a broadcast of a corpus-sized canonical set (OOM at
-    web scale; the round-2 bug) nor a window over the text hash (the
-    round-3 shape: one exchange, but a VIRAL duplicate — the thing dedup
-    exists for — funnels every copy into a single window partition, and
-    AQE can split skewed join partitions but never window partitions).
-    The rollup combines map-side, so the viral hash reaches its reducer as
-    one partial row per map task, and the semi-join runs on uniform
-    doc_id keys. Net cost: one scan + two slim skew-proof exchanges.
+    branches once per join subtree). The canonical-copy rollup is never a
+    broadcast of a corpus-sized canonical set (OOM at web scale; the
+    round-2 bug). Net cost: one scan + two slim skew-proof exchanges.
     Emits survivors only."""
-    from maxx_spark.operators.dedup import normalized
-
     s = _rep_stats(F.col("text"))
     scored = documents.select(
         "doc_id",
         F.col("lang").alias("declared_lang"),
-        _lang_pred_expr().alias("pred_lang"),
-        F.md5(normalized(F.col("text"))).alias("__h"),
+        _lang_pred(_lang_ratios(F.col("text"))).alias("pred_lang"),
         s.alias("s"),
-    ).select(
-        "doc_id",
-        "declared_lang",
-        "pred_lang",
-        "__h",
-        (
-            (F.col("s.dup_line_frac") <= 0.30)
-            & (F.col("s.dup_3gram_frac") <= 0.50)
-            & (F.col("s.symbol_ratio") <= 0.10)
-            & (F.col("s.bullet_frac") <= 0.90)
-        ).alias("keep"),
-    )
-    # canonical = min doc_id over ALL copies (rollup over the full set —
-    # the keep/lang filters apply after, matching exact_dedup semantics;
-    # Catalyst prunes this branch to (hash, doc_id), so the heavy
-    # rep-stats/lang expressions are not recomputed here)
-    canon_ids = (
-        scored.groupBy("__h").agg(F.min("doc_id").alias("doc_id")).select("doc_id")
-    )
+    ).select("doc_id", "declared_lang", "pred_lang", _rep_keep("s").alias("keep"))
+    # canonical = min doc_id over ALL copies: the keep/lang filters apply
+    # after, matching exact_dedup semantics
     return (
         scored.where(
             F.col("keep")
@@ -295,7 +289,7 @@ def corpus_filter(documents: DataFrame) -> DataFrame:
                 | (F.col("pred_lang") == "und")
             )
         )
-        .join(canon_ids, "doc_id", "semi")
+        .join(canonical_ids(documents), "doc_id", "semi")
         .select("doc_id", "declared_lang", "pred_lang")
         .orderBy("doc_id")
     )
@@ -315,7 +309,7 @@ def top_terms(documents: DataFrame, k: int = 5, min_len: int = 3) -> DataFrame:
     partitioned by doc_id. All keys are uniform (terms are zipfian but the
     df agg combines map-side; the join key fanout is bounded by per-doc
     distinct terms)."""
-    toks = documents.select("doc_id", F.explode(_tok(F.col("text"))).alias("term"))
+    toks = documents.select("doc_id", F.explode(words(F.col("text"))).alias("term"))
     toks = toks.where(F.length("term") >= min_len)
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -344,7 +338,7 @@ def vocab_build(documents: DataFrame, min_df: int = 2) -> DataFrame:
     all of them on one task, this sorts them in parallel and assigns the
     IDENTICAL ids ((df, tf, term) is a strict total order — term unique).
     """
-    toks = documents.select("doc_id", F.explode(_tok(F.col("text"))).alias("term"))
+    toks = documents.select("doc_id", F.explode(words(F.col("text"))).alias("term"))
     per_doc = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("c"))
     stats = per_doc.groupBy("term").agg(
         F.sum("c").alias("tf"), F.count(F.lit(1)).alias("df")
@@ -364,15 +358,12 @@ def source_quality(documents: DataFrame) -> DataFrame:
     cardinality = number of crawl sources). Mean aggregates the integer
     composite in DECIMAL and rounds once, so the oracle matches exactly."""
     text = F.col("text")
-    composite = quality_parts(text)["composite"]
-    norm = F.trim(F.regexp_replace(F.regexp_replace(F.lower(text), r"[^a-z0-9]+", " "), r"\s+", " "))
-    wordish = F.size(F.regexp_extract_all(F.lower(text), F.lit(r"[a-z0-9]+"), 0))
     return (
         documents.select(
             "source",
-            composite.alias("q"),
-            F.md5(norm).alias("fp"),
-            wordish.alias("wt"),
+            quality_parts(text)["composite"].alias("q"),
+            F.md5(fp_normalized(text)).alias("fp"),
+            word_tokens(text).alias("wt"),
         )
         .groupBy("source")
         .agg(
@@ -534,7 +525,7 @@ def lexical_diversity(documents: DataFrame) -> DataFrame:
     Plan: explode → groupBy(doc_id, word) → groupBy(doc_id): two
     map-side-combining exchanges on uniform keys, integer-exact until the
     single final rounding."""
-    toks = documents.select("doc_id", F.explode(_tok(F.col("text"))).alias("w"))
+    toks = documents.select("doc_id", F.explode(words(F.col("text"))).alias("w"))
     per = toks.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("c"))
     return (
         per.groupBy("doc_id")
@@ -624,7 +615,7 @@ def quality_classifier(documents: DataFrame, threshold: int = 2000) -> DataFrame
     floor() agrees across engines; the score is a BIGINT dot product.
     """
     text = F.col("text")
-    toks = _tok(text)
+    toks = words(text)
     n_tok = F.size(toks).cast("long")
     n_char = F.length(text).cast("long")
     n_alpha = F.length(F.regexp_replace(text, r"[^A-Za-z]", "")).cast("long")
@@ -676,8 +667,7 @@ def token_histogram(documents: DataFrame) -> DataFrame:
     collapses each scan partition to at most |sources| x ~7 partial rows,
     so the exchange moves kilobytes at any SF; scan-dominated, whole-stage
     codegen end-to-end. All-integer outputs (exact cross-engine)."""
-    wt = F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"[a-z0-9]+"), 0))
-    d = documents.select("source", wt.alias("wt"))
+    d = documents.select("source", word_tokens(F.col("text")).alias("wt"))
     return (
         d.groupBy("source", F.length(F.col("wt").cast("string")).alias("bucket"))
         .agg(

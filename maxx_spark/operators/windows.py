@@ -80,9 +80,7 @@ def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
-def drop_late_events(
-    events: DataFrame, delay: str = "10 minutes", num_partitions: int | None = None
-) -> DataFrame:
+def drop_late_events(events: DataFrame, delay: str = "10 minutes") -> DataFrame:
     """Watermark semantics expressed in batch (E2): processing order =
     event_id; watermark = max(ts) over all *previously arrived* events minus
     ``delay``; an event is late (dropped) iff ts < watermark.
@@ -95,8 +93,9 @@ def drop_late_events(
     global exclusive running max decomposes into ``greatest(max over all
     earlier CHUNKS, max over earlier rows in my chunk)`` for any chunking
     that is monotone in event_id.
-    1. Chunk id = (event_id - min) DIV width, width sized so ~num_partitions
-       chunks exist — a pure DETERMINISTIC projection, so (unlike the old
+    1. Chunk id = (event_id - min) DIV width, width sized so
+       ~``spark.sql.shuffle.partitions`` chunks exist — a pure
+       DETERMINISTIC projection, so (unlike the old
        repartitionByRange form) there is no sampling pass to run and no
        sampled boundary to pin with a localCheckpoint: the only
        driver-visible state is the (min, max) bounds aggregate. Arrival
@@ -121,15 +120,11 @@ def drop_late_events(
     maxima from rows the data pass never sees.
     """
     spark = events.sparkSession
-    if num_partitions is None:
-        try:
-            num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        except (TypeError, ValueError):
-            num_partitions = 200
+    num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     bounds = events.agg(F.min("event_id").alias("lo"), F.max("event_id").alias("hi")).first()
     lo = int(bounds["lo"]) if bounds["lo"] is not None else 0
     hi = int(bounds["hi"]) if bounds["hi"] is not None else 0
-    width = max(1, (hi - lo + int(num_partitions)) // int(num_partitions))
+    width = max(1, (hi - lo + num_partitions) // num_partitions)
     arrived = events.withColumn(
         "__pid", F.expr(f"(event_id - {lo}) DIV {width}").cast("long")
     )

@@ -6,17 +6,20 @@ quality-filtered, split-labelled, exactly once.
 
 Stage order is dictated by the engine invariants:
 
-1. quality/lang filters FIRST — they are stateless row predicates, and the
-   repo invariant forbids any filter between ``withWatermark`` and a
+1. the quality gate FIRST — a stateless row predicate, and the repo
+   invariant forbids any filter between ``withWatermark`` and a
    stateful operator (Catalyst would push it below the watermark node and
    freeze the event-time clock).
-2. ``withWatermark`` then ``dropDuplicatesWithinWatermark`` on the content
-   hash — the streaming form of ``operators.dedup.exact_dedup``: state
-   holds one entry per distinct hash inside the watermark horizon, so
-   re-crawled duplicates are dropped without unbounded state. Unlike the
-   batch operator (min doc_id canonical), the survivor is the FIRST
-   ARRIVAL — content-keyed downstream columns (bucket, split) are
-   identical for any survivor, which is what tests assert.
+2. ``withWatermark`` then ``dropDuplicatesWithinWatermark`` on
+   ``dedup.text_hash`` — the streaming form of ``dedup.canonical_ids``:
+   state holds one entry per distinct hash inside the ``DEDUP_DELAY``
+   watermark horizon, so re-crawled duplicates are dropped without
+   unbounded state. Unlike the batch form (min doc_id canonical), the
+   survivor is the FIRST ARRIVAL — content-keyed downstream columns
+   (bucket, split) are identical for any survivor, which is what tests
+   assert. Spark rejects this dedup on a batch frame, so
+   ``corpus_ingest`` is stream-only and ``corpus_ingest_mirror`` is the
+   one batch form (the oracle-checked q54).
 3. ``hash_split`` bucket/split projection — stateless, content-keyed, so a
    doc's split never depends on arrival order or corpus growth.
 4. ``ExactlyOnceParquetSink`` keyed on ``crawl_ts`` — idempotent commit
@@ -29,10 +32,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from maxx_spark.operators.corpus import split_cols
-from maxx_spark.operators.dedup import normalized
-from maxx_spark.operators.text import quality_parts
+from maxx_spark.operators.corpus import quality_gated, split_cols
+from maxx_spark.operators.dedup import canonical_ids, text_hash
 from maxx_spark.streaming.sink import ExactlyOnceParquetSink
+
+# event-time horizon of the streaming content dedup
+DEDUP_DELAY = "10 minutes"
 
 DOCS_STREAM_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long, "
@@ -60,7 +65,7 @@ def stage_documents_dir(
     crawl_ts = epoch-2024 + (doc_id mod 200) seconds (deterministic), plus
     ``n_dupes`` re-crawls of the first docs (new doc_id, +230 s offset, same
     text). The WHOLE event-time span is bounded at 430 s regardless of
-    corpus size — strictly inside corpus_ingest's default 10-minute dedup
+    corpus size — strictly inside corpus_ingest's 10-minute ``DEDUP_DELAY``
     watermark, so no staged row can ever be late-dropped and the
     batch-mirror equality the tests assert is independent of file arrival
     order and of the table's row count. Written as ``n_chunks`` files =
@@ -87,53 +92,32 @@ def stage_documents_dir(
     return staged.count()
 
 
-def corpus_ingest(
-    docs: DataFrame,
-    min_quality: int = 3,
-    delay: str = "10 minutes",
-    train_pct: int = 90,
-    val_pct: int = 5,
-) -> DataFrame:
-    """The transformation stage (stream- AND batch-applicable: pass a batch
-    DataFrame to get the deterministic batch mirror, using dropDuplicates
-    semantics on the same hash)."""
-    q = quality_parts(F.col("text"))["composite"]
-    filtered = docs.where(q >= F.lit(min_quality)).withColumn(
-        "text_hash", F.md5(normalized(F.col("text")))
+def corpus_ingest(docs: DataFrame) -> DataFrame:
+    """The transformation stage over a documents STREAM (see the module
+    docstring); ``corpus_ingest_mirror`` is its batch form."""
+    deduped = (
+        quality_gated(docs)
+        .withColumn("text_hash", text_hash(F.col("text")))
+        .withWatermark("crawl_ts", DEDUP_DELAY)
+        .dropDuplicatesWithinWatermark(["text_hash"])
     )
-    if filtered.isStreaming:
-        deduped = filtered.withWatermark("crawl_ts", delay).dropDuplicatesWithinWatermark(
-            ["text_hash"]
-        )
-    else:
-        deduped = filtered.dropDuplicates(["text_hash"])
-    bucket, split = split_cols(train_pct, val_pct)
+    bucket, split = split_cols()
     return deduped.select(
         "doc_id", "text_hash", "lang", "source", "crawl_ts", bucket
     ).select("doc_id", "text_hash", "lang", "source", "crawl_ts", "bucket", split)
 
 
-def corpus_ingest_mirror(documents: DataFrame, min_quality: int = 3,
-                         train_pct: int = 90, val_pct: int = 5) -> DataFrame:
+def corpus_ingest_mirror(documents: DataFrame) -> DataFrame:
     """DETERMINISTIC batch mirror of the ingest contract for the oracle
     gate (q54): same quality gate and content-keyed split columns, but the
-    dedup survivor is pinned to the canonical min-doc_id row (the streaming
-    op keeps first arrival — nondeterministic across partitions, so the
-    driver-checked mirror pins the choice the way exact_dedup does).
-    Works on the raw driver ``documents`` table (no crawl_ts)."""
-    q = quality_parts(F.col("text"))["composite"]
-    filtered = documents.where(q >= F.lit(min_quality)).withColumn(
-        "text_hash", F.md5(normalized(F.col("text")))
-    )
-    # canonical pick as a slim map-side-combined rollup + doc_id semi-join
-    # (round 4, same as corpus_filter/training_pipeline): a row_number
-    # window over the content hash would funnel every copy of a viral
-    # duplicate into one window partition, which AQE cannot split
-    canon_ids = (
-        filtered.groupBy("text_hash").agg(F.min("doc_id").alias("doc_id")).select("doc_id")
-    )
-    canon = filtered.join(canon_ids, "doc_id", "semi")
-    bucket, split = split_cols(train_pct, val_pct)
+    dedup survivor is pinned to the canonical min-doc_id row
+    (``dedup.canonical_ids``; the streaming op keeps first arrival —
+    nondeterministic across partitions, so the driver-checked mirror pins
+    the choice the way exact_dedup does). Works on the raw driver
+    ``documents`` table (no crawl_ts)."""
+    filtered = quality_gated(documents).withColumn("text_hash", text_hash(F.col("text")))
+    canon = filtered.join(canonical_ids(filtered), "doc_id", "semi")
+    bucket, split = split_cols()
     return (
         canon.select("doc_id", "text_hash", "lang", "source", bucket)
         .select("doc_id", "text_hash", "lang", "source", "bucket", split)
@@ -147,13 +131,11 @@ def corpus_ingest_query(
     out_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int | None = None,
-    min_quality: int = 3,
-    delay: str = "10 minutes",
 ):
     """documents stream → quality gate → watermarked streaming dedup →
     split labelling → exactly-once sink. Returns (StreamingQuery, sink)."""
     docs = documents_stream(spark, src, max_files_per_trigger)
-    out = corpus_ingest(docs, min_quality=min_quality, delay=delay)
+    out = corpus_ingest(docs)
     sink = ExactlyOnceParquetSink(out_dir, ts_col="crawl_ts")
     q = (
         out.writeStream.foreachBatch(sink)

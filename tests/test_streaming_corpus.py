@@ -19,7 +19,7 @@ def staged_docs(spark, tmp_path_factory, sf_dir):
 def test_streaming_corpus_ingest_matches_batch_mirror(spark, staged_docs, tmp_path):
     from maxx_spark.streaming.corpus import (
         DOCS_STREAM_SCHEMA,
-        corpus_ingest,
+        corpus_ingest_mirror,
         corpus_ingest_query,
     )
 
@@ -32,7 +32,7 @@ def test_streaming_corpus_ingest_matches_batch_mirror(spark, staged_docs, tmp_pa
     got = sink.read_committed(spark)
 
     batch_docs = spark.read.schema(DOCS_STREAM_SCHEMA).parquet(src)
-    want = corpus_ingest(batch_docs)
+    want = corpus_ingest_mirror(batch_docs)
 
     # one survivor per distinct content hash, quality-filtered
     got_rows = got.collect()
