@@ -116,6 +116,8 @@ def flatten_unit(unit, url: str, warc_ts, text: str, info: dict) -> list[dict]:
     from maxx_spark.matparse.mparser import source_slice
 
     rows: list[dict] = []
+    # split once per page, not once per unit (source_slice)
+    lines = text.split("\n") if text is not None else None
     ident = info["identifier"]
     ns = info["namespace"]
     is_cf_member = info["classfolder"] is not None and info["stem"] != info["classfolder"]
@@ -147,7 +149,7 @@ def flatten_unit(unit, url: str, warc_ts, text: str, info: dict) -> list[dict]:
                 else None
             ),
             "extracted_text": (
-                source_slice(text, unit.lineno, unit.endlineno)
+                source_slice(lines, unit.lineno, unit.endlineno)
                 if unit.lineno and text is not None
                 else text
             ),
@@ -197,7 +199,7 @@ def flatten_unit(unit, url: str, warc_ts, text: str, info: dict) -> list[dict]:
                 "returns": _args_list(m.returns) if m.kind == "function" else None,
                 "sections": None,
                 "extracted_text": (
-                    source_slice(text, m.lineno, m.endlineno)
+                    source_slice(lines, m.lineno, m.endlineno)
                     if m.lineno and text is not None
                     else None
                 ),

@@ -870,8 +870,8 @@ def parse_mfile(text: str, stem: str, config: ExtractConfig | None = None) -> MU
     return MatlabFileParser(text, stem, config).parse()
 
 
-def source_slice(text: str, lineno: int, endlineno: int) -> str:
+def source_slice(lines: list[str], lineno: int, endlineno: int) -> str:
     """The reference's byte-identity invariant (objects.py:470-495):
-    lines[lineno-1:endlineno], joined and dedented."""
-    lines = text.split("\n")[lineno - 1 : endlineno]
-    return textwrap.dedent("\n".join(lines))
+    lines[lineno-1:endlineno], joined and dedented. ``lines`` is the page's
+    ``text.split("\n")``, split once per page by the caller."""
+    return textwrap.dedent("\n".join(lines[lineno - 1 : endlineno]))

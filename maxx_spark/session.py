@@ -33,6 +33,17 @@ spent 393-635 ms in ``getBatch`` with the listing job and 23-38 ms without.
 Other masters keep Spark's default: on an object store the parallel listing
 of many paths is the faster path. An ``extra_conf`` value wins on any master.
 
+A live stream's micro-batches run back to back (Spark's default trigger,
+``streaming.pipeline.extraction_query``), so the only clock left on the live
+path is the poll of an idle source: ``spark.sql.streaming.pollingDelay``
+defaults to ``500ms`` on every master (an ``extra_conf`` value wins), against
+Spark's 10 ms. Each poll of a file source lists its directory: at 10 ms an
+idle live query burns over half a core, at 500 ms about a tenth of one (the
+table at the setting; ``BENCH/live_idle_poll.json``). A 2 s poll would sleep
+2 s whenever the first poll of a new query finds the directory empty.
+``availableNow`` streams (CEP, corpus, backlog drains) stop instead of
+polling, so the setting does not touch them.
+
 ``get_spark`` also runs a one-time session warmup that grows the Python
 worker pool and imports pandas in every worker (``SPARK_GRAFT_WARMUP=0``
 disables it).
@@ -110,6 +121,14 @@ def get_spark(
         # executors share its JVM and filesystem, so a parallel listing job
         # only adds ~0.4-0.6 s to a live getBatch (module docstring)
         conf.setdefault("spark.sql.sources.parallelPartitionDiscovery.threshold", "2147483647")
+    # the live trigger's only clock: how long an idle source waits before the
+    # next poll. Idle JVM CPU per 10 s, 2 s after a live drain (local[4],
+    # 225 / 2000 seen files; BENCH/live_idle_poll.json):
+    #   fixed 2 s trigger (old live path)      0.41 / 0.59 s
+    #   back to back, Spark's 10 ms poll       5.53 / 8.42 s
+    #   back to back, 500 ms poll (this)       1.40 / 1.63 s
+    # (0.89 s at 2000 files once the drain's JIT compilation has settled)
+    conf.setdefault("spark.sql.streaming.pollingDelay", "500ms")
 
     b = (
         SparkSession.builder.appName(app_name)

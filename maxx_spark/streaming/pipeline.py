@@ -35,6 +35,13 @@ def extraction_query(
     outside the root's membership (top-level private dirs, Contents.m,
     plain dirs below +pkg) never reach the extractor.
 
+    With ``available_now=False`` the query is live and keeps Spark's default
+    trigger: each micro-batch starts as soon as the previous one commits, so
+    a file waits for at most one batch in flight, never for a clock. A
+    source with no new files is polled again every
+    ``spark.sql.streaming.pollingDelay`` (500 ms from ``get_spark``; see
+    ``maxx_spark.session``).
+
     Returns (StreamingQuery, sink). Resumable: same checkpoint_dir resumes
     from the last committed offset; replayed batches are skipped by the
     sink's commit log.
@@ -52,9 +59,7 @@ def extraction_query(
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-    q = w.trigger(availableNow=True).start() if available_now else w.trigger(
-        processingTime="2 seconds"
-    ).start()
+    q = w.trigger(availableNow=True).start() if available_now else w.start()
     return q, sink
 
 

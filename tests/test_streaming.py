@@ -5,6 +5,7 @@ out-of-order arrivals (E1-E10)."""
 import datetime as dt
 import glob
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -93,6 +94,74 @@ def test_incremental_resume_processes_new_files(spark, staged, tmp_path):
     q2.awaitTermination(300)
     n2 = sink2.read_committed(spark).count()
     assert n2 > n1
+
+
+def _rows_hash(df):
+    """Row count and an order-insensitive hash over every column."""
+    cols = [F.col(c).cast("string") for c in df.columns]
+    r = df.agg(F.count(F.lit(1)).alias("n"),
+               F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("h")).first()
+    return r["n"], r["h"]
+
+
+def test_live_extraction_runs_back_to_back(spark, tmp_path):
+    """A live query (no availableNow) keeps Spark's default trigger: the next
+    micro-batch starts when the previous one commits, and an idle source is
+    polled every 500 ms. Files staged in two waves, the second while the
+    query runs, commit exactly the rows of a batch extraction."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from maxx_spark.extract import extract_code_units
+    from maxx_spark.gen import generate_pages_rows
+    from maxx_spark.schema import CODE_UNITS
+
+    src, side = str(tmp_path / "live_src"), str(tmp_path / "live_side")
+    os.makedirs(src)
+    os.makedirs(side)
+    rows = generate_pages_rows(n_projects=1, n_filler=2, seed=7)
+    arrow_schema = to_arrow_schema(PAGES)
+
+    def stage(k0, part):
+        # one page per file, written aside and renamed in whole
+        for k, row in enumerate(part, k0):
+            name = f"live-{k:03d}.parquet"
+            table = pa.Table.from_pylist([dict(zip(PAGES.fieldNames(), row))], schema=arrow_schema)
+            pq.write_table(table, os.path.join(side, name))
+            os.rename(os.path.join(side, name), os.path.join(src, name))
+
+    def wait_committed():
+        # every staged file is in a committed batch once the sink holds the
+        # batch extraction's row count (non-MATLAB pages yield no rows, and
+        # parquet row-group pruning keeps them out of numInputRows)
+        want = extract_code_units(spark.read.schema(PAGES).parquet(src))
+        n, deadline = want.count(), time.time() + 240
+        while sink.read_committed(spark).count() < n:
+            assert q.exception() is None, q.exception()
+            assert time.time() < deadline, "live query did not commit every staged file"
+            time.sleep(0.5)
+        return want
+
+    q, sink = extraction_query(spark, src, str(tmp_path / "live_out"), str(tmp_path / "live_ckpt"),
+                               max_files_per_trigger=None, available_now=False)
+    try:
+        first, second = rows[:15], rows[15:]
+        stage(0, first)
+        wait_committed()
+        stage(len(first), second)
+        want = wait_committed()
+        execution = q._jsq.streamingQuery()
+        trigger, polling_ms = execution.trigger().toString(), execution.pollingDelayMs()
+        batches = [p["batchId"] for p in q.recentProgress if p["numInputRows"] > 0]
+    finally:
+        q.stop()
+
+    assert trigger == "ProcessingTimeTrigger(0)"
+    assert polling_ms == 500
+    assert len(batches) >= 2 and set(batches) <= set(sink.committed_batches())
+    committed = sink.read_committed(spark).select(*CODE_UNITS.fieldNames())
+    assert _rows_hash(committed) == _rows_hash(want)
 
 
 def test_windowed_counts_stream(spark, staged, tmp_path):
