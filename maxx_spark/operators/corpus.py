@@ -106,8 +106,14 @@ def sequence_packing(
 
     1. within-shard running sum — every window partition holds at most
        ``shard_size`` docs, a mega-source fans out over ⌈docs/k⌉ partitions;
-    2. per-(source, shard) token totals — a groupBy on the SAME keys the
-       window just partitioned on, so Catalyst reuses the exchange;
+    2. per-(source, shard) token totals — a groupBy on the same keys the
+       window partitions on, but NOT over the window's exchange: column
+       pruning drops the window from this branch and the window branch's
+       scan carries an extra ``isnotnull(doc_id DIV k)`` filter, so the
+       subtrees differ and nothing is reused. The input is evaluated twice:
+       q47's executed plan holds two parquet scans and two
+       ``hashpartitioning(source, __shard)`` exchanges, each computing the
+       regex token count (ROADMAP item 5);
     3. shard base offsets — a running sum over the ROLLUP (one row per
        shard: corpus/k rows total, kilobyte-scale), partitioned by source;
     4. join the shard base back on (source, shard) — no broadcast hint

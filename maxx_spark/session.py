@@ -8,8 +8,18 @@ every knob is chosen to also be the right *shape* at cluster scale:
   the session sets none of them; 128 MiB parquet splits are the default too.
 - Arrow enabled and batch-size-bounded (the extraction stage ships BINARY
   html blobs through Arrow; unbounded batches would OOM Python workers).
-- shuffle.partitions defaults to cores*2 locally; on a real cluster this is
-  overridden (or left to AQE coalescing from a high initial number).
+- ``spark.sql.shuffle.partitions`` defaults to the master's core count
+  (``local[N]``: N, ``local[*]``: the host's CPUs, other masters: 32), so
+  every stateful micro-batch (CEP, resolver, class folders) runs one task
+  per state partition in ONE wave. Each extra wave pays its own state-store
+  load, commit and Python worker round trip. Interleaved perfbench,
+  local[4], 10 pairs per workload, against the old ``max(cores*2, 8)`` = 8:
+  ``events_per_s`` uniform 2202 -> 2845 (x1.29, 10/10 wins), skewed
+  2313 -> 2671 (x1.15, 9/10) (``BENCH/cep_state_partitions.json``). Batch
+  queries need no other value: AQE coalesces their reduce side, and the
+  extraction stage has no shuffle. A stateful checkpoint keeps the
+  partition count it was created with; a later session value does not
+  change it. An ``extra_conf`` value wins.
 
 On a ``local*`` master every Python worker is forked from the engine's
 daemon, ``maxx_spark.worker_daemon`` (``spark.python.daemon.module``), whose
@@ -95,11 +105,10 @@ def driver_memory() -> str:
 def get_spark(
     app_name: str = "maxx_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-    # parse core count out of local[N] for shuffle sizing
+    # parse core count out of local[N]: shuffle partitions and warmup width
     cores = 32
     if master.startswith("local["):
         inner = master[6:-1]
@@ -107,9 +116,11 @@ def get_spark(
             cores = int(inner)
         elif inner == "*":
             cores = os.cpu_count() or 8
-    if shuffle_partitions is None:
-        shuffle_partitions = max(cores * 2, 8)
     conf = dict(extra_conf or {})
+    # one wave per stateful micro-batch: a streaming state operator runs one
+    # task per state partition, so more partitions than cores means a second
+    # wave of state-store loads and commits in every CEP batch (module docstring)
+    conf.setdefault("spark.sql.shuffle.partitions", str(cores))
     if master.startswith("local"):
         # local executors see the driver's filesystem, so workers can import
         # the engine's daemon from the package root (module docstring)
@@ -133,7 +144,6 @@ def get_spark(
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # let AQE re-plan INSIDE cached plans too (default false): the dedup
         # suite caches its shared shingle index, and with the default every
         # consumer stage inherits the cache's full static shuffle partition

@@ -1,7 +1,8 @@
 """Throughput metrics (E10): a StreamingQueryListener recording per-batch
 input rows, processing time, and rows/sec — the figures BENCH/BASELINE.md
 reports for the two-parallelism scaling criterion — plus what each batch
-leaves behind: state-store rows and memory, late drops and the watermark."""
+leaves behind: state-store rows and memory, the state partition count, the
+time of the timeout pass, late drops and the watermark."""
 
 from __future__ import annotations
 
@@ -28,6 +29,12 @@ def _ledger_row(p) -> dict:
         "state_rows_total": sum(o.numRowsTotal for o in ops),
         "state_memory_bytes": sum(o.memoryUsedBytes for o in ops),
         "rows_dropped_by_watermark": sum(o.numRowsDroppedByWatermark for o in ops),
+        # tasks per stateful stage (0 when stateless): a checkpoint keeps the
+        # count it was created with, whatever the session's shuffle partitions
+        "state_partitions": max((o.numShufflePartitions for o in ops), default=0),
+        # the timeout pass: a state-store scan for expired timers feeding a
+        # second Python runner (BENCH/cep_state_partitions.json splits it)
+        "state_removals_ms": sum(o.allRemovalsTimeMs for o in ops),
         "watermark": (p.eventTime or {}).get("watermark"),
     }
 

@@ -10,7 +10,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from maxx_spark.session import get_spark
 
-    s = get_spark("maxx-tests", master="local[4]", shuffle_partitions=4)
+    s = get_spark("maxx-tests", master="local[4]")
     yield s
     s.stop()
 

@@ -94,6 +94,12 @@ def test_workers_fork_from_engine_daemon(spark):
     assert got == {stat_checked_invalidate_caches.__qualname__}
 
 
+def test_state_partitions_default_to_the_cores(spark):
+    """The test session (local[4]) passes no partition count: each stateful
+    micro-batch runs one task per core, in one wave."""
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+
+
 def test_python_stage_runs_outside_the_repo(tmp_path):
     """Workers import the daemon (and the engine) from any working
     directory, without PYTHONPATH."""
@@ -106,8 +112,13 @@ def test_python_stage_runs_outside_the_repo(tmp_path):
         from maxx_spark.schema import PAGES
         from maxx_spark.session import get_spark
 
-        spark = get_spark("outside-repo", master="local[2]", shuffle_partitions=2)
+        spark = get_spark("outside-repo", master="local[2]")
         try:
+            # one shuffle partition per core; an extra_conf value wins
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
+            again = get_spark("outside-repo", master="local[2]",
+                              extra_conf={{"spark.sql.shuffle.partitions": "3"}})
+            assert again.conf.get("spark.sql.shuffle.partitions") == "3"
             pages = spark.createDataFrame(generate_pages_rows(n_projects=1, n_filler=0)[:2], PAGES)
             assert pages.count() == 2
             print("units", extract_code_units(pages).count())

@@ -1015,6 +1015,94 @@ def test_streaming_session_paths_resumes_from_checkpoint(spark, tmp_path):
     assert _run_leg() == [(start_ms, "view>click>purchase", 3)]
 
 
+def test_cep_checkpoint_keeps_its_state_partitions(spark, tmp_path):
+    """A stateful checkpoint keeps the state partition count it was created
+    with (``session.get_spark`` sizes new ones to the cores): the funnel
+    starts at 8 partitions and commits one batch, then resumes in the test
+    session at its 4 cores with more files. Every batch of both runs keeps 8
+    state partitions and 8 state store instances, and the emitted (user,
+    step) rows equal the batch mirror over all events."""
+    from maxx_spark.operators.windows import event_funnel
+    from maxx_spark.streaming.cep import funnel_stream
+
+    t0 = dt.datetime(2024, 9, 3, 0, 0, 0)
+    m = lambda x: t0 + dt.timedelta(minutes=x)
+    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
+    src = str(tmp_path / "parts_events")
+    ckpt = str(tmp_path / "ck_parts")
+    out_dir = str(tmp_path / "parts_out")
+    key = "spark.sql.shuffle.partitions"
+
+    def _run_leg():
+        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+        q = (
+            funnel_stream(stream, delay="10 minutes", deadline="100 hours")
+            .writeStream.foreachBatch(lambda df, bid: df.write.mode("append").parquet(out_dir))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(300)
+        assert q.exception() is None
+        return q
+
+    _staged_files(spark, src, [
+        [(0, m(0), 1, "view", 1.0, "{}"), (1, m(1), 2, "view", 1.0, "{}"),
+         (2, m(2), 1, "click", 1.0, "{}")],
+    ], schema)
+    session_n = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    try:
+        first = _run_leg().recentProgress
+    finally:
+        spark.conf.set(key, session_n)
+    assert session_n == "4" and [p.batchId for p in first if p.numInputRows] == [0]
+
+    _staged_files(spark, src, [
+        [(3, m(3), 2, "click", 1.0, "{}"), (4, m(4), 1, "purchase", 1.0, "{}")],
+        [(100, m(60), 99, "noop", 1.0, "{}")],
+        [(101, m(120), 99, "noop", 1.0, "{}")],
+    ], schema)
+    listener, q = _with_listener(spark, _run_leg)
+    second = q.recentProgress
+    assert len([p for p in second if p.numInputRows]) == 3
+    ops = [o for p in first + second for o in p.stateOperators]
+    assert len(ops) == len(first) + len(second)
+    assert {(o.numShufflePartitions, o.numStateStoreInstances) for o in ops} == {(8, 8)}
+    # the ledger reports the same count, and the timeout pass's time
+    detail = listener.summary(q)["detail"]
+    assert [b["state_partitions"] for b in detail] == [8, 8, 8]
+    assert all(isinstance(b["state_removals_ms"], int) and b["state_removals_ms"] >= 0
+               for b in detail)
+
+    got = sorted((r["user_id"], r["step_idx"]) for r in spark.read.parquet(out_dir).collect())
+    assert got == [(1, 0), (1, 1), (1, 2), (2, 0), (2, 1)]
+    batch_n = {r["step_idx"]: r["n_users"]
+               for r in event_funnel(spark.read.schema(schema).parquet(src)).collect()}
+    assert batch_n == {i: sum(1 for u in got if u[1] == i) for i in range(3)}
+
+
+def test_ledger_row_state_partitions_and_removals():
+    """``_ledger_row`` reports the largest state partition count over the
+    stateful operators and their summed removal time; 0 and 0 without one."""
+    from types import SimpleNamespace
+
+    from maxx_spark.streaming.metrics import _ledger_row
+
+    def op(parts, removals_ms):
+        return SimpleNamespace(numRowsTotal=1, memoryUsedBytes=1, numRowsDroppedByWatermark=0,
+                               numShufflePartitions=parts, allRemovalsTimeMs=removals_ms)
+
+    def progress(ops):
+        return SimpleNamespace(runId="r", batchId=0, numInputRows=1, durationMs={},
+                               processedRowsPerSecond=1.0, stateOperators=ops, eventTime={})
+
+    row = _ledger_row(progress([op(8, 5), op(4, 7)]))
+    assert (row["state_partitions"], row["state_removals_ms"]) == (8, 12)
+    row = _ledger_row(progress([]))
+    assert (row["state_partitions"], row["state_removals_ms"]) == (0, 0)
+
+
 def _staged_files(spark, src, batches, schema):
     """Append one parquet file per batch, with strictly increasing mtimes
     (the file source orders a trigger's files by modification time)."""

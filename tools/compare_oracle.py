@@ -156,7 +156,7 @@ def main() -> int:
     import __spark_entry__ as e
     from maxx_spark.session import get_spark
 
-    spark = get_spark("oracle-compare", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("oracle-compare", master="local[8]")
     all_failed = []
     out: dict = {"tool": "tools/compare_oracle.py", "results": {}}
     for sf_dir in sfs:

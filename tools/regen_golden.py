@@ -52,7 +52,7 @@ def main() -> None:
     from maxx_spark.session import get_spark
     import __spark_entry__ as e
 
-    spark = get_spark("regen-golden", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("regen-golden", master="local[8]")
     out = [HEADER]
     specs = {
         "q23_extract_units": (
